@@ -250,11 +250,13 @@ object Bench {
     val warmSib = new java.io.File(
       new java.io.File(sfDir).getParentFile, "sf0.001")
     val warmDir = if (warmSib.isDirectory) warmSib.getPath else sfDir
-    benchQueries.foreach { case (_, fn) =>
-      try fn(spark, warmDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-      finally spark.catalog.clearCache()
+    val (_, warmCompiles) = countingCompiles {
+      benchQueries.foreach { case (_, fn) =>
+        try fn(spark, warmDir)
+          .write.format("noop").mode("overwrite").save()
+        catch { case _: Throwable => () }
+        finally spark.catalog.clearCache()
+      }
     }
 
     // Deterministic index-build accounting (see IndexBacked): wipe the
@@ -331,8 +333,9 @@ object Bench {
     // protocol — compare pass1-vs-pass1 across arms; the official
     // sidecars stay min2). Any other value = the min2 default.
     val singlePass = sys.env.get("SPARK_GRAFT_BENCH_PASSES").contains("1")
-    val pass1 = timedPass(record = singlePass)
-    val pass2 = if (singlePass) pass1 else timedPass(record = true)
+    val (pass1, compiles1) = countingCompiles(timedPass(record = singlePass))
+    val (pass2, compiles2) =
+      if (singlePass) (pass1, -1L) else countingCompiles(timedPass(record = true))
     val results = pass1.zip(pass2).map { case ((name, a), (_, b)) =>
       name -> (if (a < 0) b else if (b < 0) a else math.min(a, b))
     }
@@ -361,6 +364,13 @@ object Bench {
       (if (streaming.nonEmpty)
         s""","streaming_protocol":"$streamProtoHead;median-of-3;host-swing see BENCH_streaming_ab.json""""
        else "")
+    // Per-pass totals and code-generator compiles (its cache misses).
+    // With the class cache sized to the working set (EngineConf) a timed
+    // pass compiles only sources no earlier pass generated (tens at
+    // sf0.1); hundreds per pass mean the cache thrashes again.
+    def passTotal(p: Seq[(String, Double)]) = p.map(_._2).filter(_ >= 0).sum
+    val passTotalsJson =
+      s""","pass_totals_s":[${jnum(passTotal(pass1))},${jnum(passTotal(pass2))}],"codegen_compiles":{"warmup":$warmCompiles,"pass1":$compiles1,"pass2":$compiles2}"""
     val passesJson = pass1.zip(pass2).map { case ((k, a), (_, b)) =>
       s""""$k":[${jnum(a)},${jnum(b)}]""" }.mkString("{", ",", "}")
     // Index build cost, split out per IndexBacked query: build_s is the
@@ -399,7 +409,7 @@ object Bench {
     val proto = if (singlePass) "single-pass" else "min2"
     val winJson = windowJson(runStartMs)
     val fullJson =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"$proto","failures":$failures,"n_queries":${results.size},"queries":$fullQs,"passes":$passesJson$indexJson$streamJson$gateJson,$fixJson,$wmJson,$winJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"$proto","failures":$failures,"n_queries":${results.size},"queries":$fullQs,"passes":$passesJson$passTotalsJson$indexJson$streamJson$gateJson,$fixJson,$wmJson,$winJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullJson + "\n").getBytes("UTF-8"))
     println(s"BENCH_DETAIL $fullJson")
@@ -417,6 +427,15 @@ object Bench {
       }.mkString(""","index_build":{""", ",", "}")
     println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"$proto","failures":$failures,"n_queries":${results.size},"queries":$headQs$headIdx$streamJson$gateJson,$fixJson,$winJson,"detail":"bench_full.json","sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Runs `body` and counts the classes Spark's code generator compiled
+    * meanwhile (`CodegenMetrics` counts one compilation per cache miss). */
+  private def countingCompiles[T](body: => T): (T, Long) = {
+    val c = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val c0 = c.getCount
+    val r = body
+    (r, c.getCount - c0)
   }
 
   /** Streaming rates, best (max) of two temporally separated passes — the

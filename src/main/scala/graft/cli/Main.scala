@@ -16,7 +16,7 @@ import graft.streaming.{RainStormApps, RainStormJob}
 object Main {
 
   private def session(name: String): SparkSession = {
-    val s = SparkSession.builder()
+    val s = graft.core.EngineConf(SparkSession.builder())
       .appName(name)
       // spark-submit injects the real master on a cluster; default to
       // local[*] so the CLI also runs standalone.

@@ -2,39 +2,47 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level AQE partition-sizing switches, shared by every runnable
-  * main (Bench/Verify/JobProfile/PlanDump) and the test session — A/B
-  * measurement plumbing for the r16 floor investigation (VERDICT r15
-  * next-#2). BOTH DEFAULTS ARE THE SPARK DEFAULTS: the non-default arms
-  * were measured and REJECTED as scale-unsafe, and the switches are kept
-  * so the negative result is reproducible (OPTIMIZATION_r16.md):
+/** Engine-level session settings, applied to the builder of every
+  * session the engine creates (Bench, Verify, JobProfile, PlanDump, the
+  * `graft.cli.Main` verbs, StreamScaleBench, the test session and the
+  * benchmark harness).
   *
-  *  - `SPARK_GRAFT_CACHED_AQE=true` sets
-  *    `canChangeCachedPlanOutputPartitioning=true`, letting AQE coalesce
-  *    partitions INSIDE cache materialization. At sf0.1/32 cores it cut
-  *    the 24-query heavy subset 67.99 -> 60.48 s (min2 of 2 runs — the
-  *    "32-task passes over MB-scale cached relations" floor is real and
-  *    this is the lever that removes it). But at open sf2 the same flag
-  *    REGRESSED the pair-kernel subset 44.6 -> 52.5 s (tx08 -3.2 s,
-  *    dd17 -2.7 s): a coalesced cache loses its hashpartitioning(k,
-  *    CPUS) output contract, so every downstream co-partitioned join
-  *    that previously reused the cache's exchange re-shuffles REAL data.
-  *    The sf0.1 win is a local-latency artifact; the sf2 loss is the
-  *    100 TB truth. Rejected per the round's own rule (no local-only
-  *    wins).
+  * `spark.sql.codegen.cache.maxEntries` sizes Spark's cache of compiled
+  * generated classes, an LRU keyed by context classloader plus source
+  * text. Spark's default of 100 entries is far below this engine's
+  * working set, so the cache missed on almost every lookup and warm
+  * passes recompiled their generated code with Janino: 309-310 of the
+  * q01-q33 family's 325 classes on a second sf0.001 pass
+  * (`CodegenCacheSpec`). Measured with `graft.Bench` at sf0.1 on 4
+  * cores (its `codegen_compiles` field, two runs): 1,818-1,822 distinct
+  * sources in the sf0.001 warm-up, 314-328 more in the first sf0.1 pass
+  * and 23-27 in the second, at most 2,173 in all. 8192 keeps more than
+  * twice that, so each class compiles once per JVM. The cost is what the
+  * cache keeps alive: +18 MB of metaspace at the end of that run
+  * (198 -> 216 MB), plus the source text of its keys on the heap, about
+  * 23 MB (10.6 KB mean per source). The cap is a bound, not a
+  * reservation.
   *
-  *  - `SPARK_GRAFT_PARALLELISM_FIRST=false` sets AQE's
-  *    `coalescePartitions.parallelismFirst=false` (the Spark tuning
-  *    guide's recommendation). Measured WITH cached-AQE at sf0.1/32c:
-  *    66.86 vs 62.47 s for parallelism-first — the advisory-sized (64 MB)
-  *    partitions serialize this engine's compute-dense post-shuffle
-  *    stages (pair explodes over compact postings), which is also the
-  *    wrong direction at scale for the same kernels. Rejected.
+  * This is a static SQL conf: `CodeGenerator` reads it once per JVM,
+  * from the active session's conf, when it is first used. A session
+  * built without this function before that moment leaves the cap at 100
+  * for the whole JVM.
+  *
+  * The two AQE settings keep Spark's defaults, which won the A/B
+  * measurements recorded in OPTIMIZATION_r17.md: coalescing inside cache
+  * materialization (`canChangeCachedPlanOutputPartitioning=true`) won
+  * 11 % at sf0.1 but lost 18 % at open sf2, because a coalesced cache
+  * loses the hash partitioning that downstream joins reuse; and
+  * `parallelismFirst=false` serialized the compute-dense post-shuffle
+  * stages.
   */
 object EngineConf {
+  val CodegenCacheMaxEntries = 8192
+
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-      sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
+    .config("spark.sql.codegen.cache.maxEntries",
+      CodegenCacheMaxEntries.toString)
+    .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-      sys.env.getOrElse("SPARK_GRAFT_CACHED_AQE", "false"))
+      "false")
 }

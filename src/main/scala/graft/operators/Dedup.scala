@@ -293,7 +293,7 @@ object Dedup {
     // idle 32c A/B (3 alternating pairs, SPARK_GRAFT_MAT_OFF=dd15)
     // mat-on {1.65, 1.85, 1.67} vs mat-off {1.46, 1.72, 1.57} s, and
     // under a 16-core antagonist mat-off read <= mat-on as well
-    // (OPTIMIZATION_r16.md). The persist stays (sequential reuse);
+    // (OPTIMIZATION_r17.md). The persist stays (sequential reuse);
     // `grouped` is already warm via the hashOk injectivity probe.
     // candidates: prefix sids probe the full capped postings (rebuilt
     // from the encoded arrays — one narrow explode, no second string

@@ -91,7 +91,7 @@ object StreamScaleBench {
     // stamps which one ran so A/Bs are self-describing.
     val horizon = if (args.length > 2) args(2) else "10 minutes"
     val store = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
-    val spark = SparkSession.builder()
+    val spark = graft.core.EngineConf(SparkSession.builder())
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
