@@ -2,8 +2,9 @@ package graft.cli
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.operators.Grep
-import graft.streaming.{RainStormApps, RainStormJob}
+import graft.streaming.{RainStormApps, RainStormJob, RainStormOp}
 
 /** CLI verbs mirroring the reference's `run.sh` surface (reference
   * run.sh:16-27): `dgrep` (LogQuerier, src/LogQuerier/client.py:164-199)
@@ -50,19 +51,13 @@ object Main {
 
     // rainstorm simple <pattern> <idx1> <idx2> <in> <out> <ckpt>
     case "rainstorm" :: "simple" :: p :: i1 :: i2 :: in :: out :: ckpt :: Nil =>
-      val spark = session("graft-rainstorm")
-      RainStormJob.start(spark, in,
-        RainStormApps.simpleApp(p, i1.toInt, i2.toInt), out, ckpt,
-        stateful = false).awaitTermination()
-      spark.stop()
+      runRainStorm(RainStormApps.simpleApp(p, i1.toInt, i2.toInt), in, out,
+        ckpt, stateful = false)
 
     // rainstorm complex <filterIdx> <filterVal> <keyIdx> <in> <out> <ckpt>
     case "rainstorm" :: "complex" :: fi :: fv :: ki :: in :: out :: ckpt :: Nil =>
-      val spark = session("graft-rainstorm")
-      RainStormJob.start(spark, in,
-        RainStormApps.complexApp(fi.toInt, fv, ki.toInt), out, ckpt,
-        stateful = true).awaitTermination()
-      spark.stop()
+      runRainStorm(RainStormApps.complexApp(fi.toInt, fv, ki.toInt), in, out,
+        ckpt, stateful = true)
 
     // sql <sfDir> <file.sql | inline SQL>  (views registered, graft
     // functions available; statements split on ';')
@@ -85,6 +80,34 @@ object Main {
     case _ =>
       usage()
   }
+
+  private def runRainStorm(ops: Seq[RainStormOp], in: String, out: String,
+      ckpt: String, stateful: Boolean): Unit = {
+    val spark = session("graft-rainstorm")
+    spark.streams.addListener(batchProgress(println))
+    RainStormJob.start(spark, in, ops, out, ckpt, stateful).awaitTermination()
+    spark.stop()
+  }
+
+  /** Prints one line per committed micro-batch as the job runs: batch id,
+    * input rows, the `addBatch`/`walCommit`/`commitOffsets` phase times
+    * and the rows held in state. Progress events of idle triggers, which
+    * run no batch, are skipped. */
+  private[graft] def batchProgress(emit: String => Unit): StreamingQueryListener =
+    new StreamingQueryListener {
+      import StreamingQueryListener._
+      def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      def onQueryProgress(e: QueryProgressEvent): Unit = {
+        val p = e.progress
+        def ms(phase: String): Long = p.durationMs.getOrDefault(phase, 0L)
+        if (p.durationMs.containsKey("addBatch"))
+          emit(s"[rainstorm] batch ${p.batchId}: ${p.numInputRows} input rows, " +
+            s"addBatch ${ms("addBatch")} ms, walCommit ${ms("walCommit")} ms, " +
+            s"commitOffsets ${ms("commitOffsets")} ms, " +
+            s"state rows ${p.stateOperators.map(_.numRowsTotal).sum}")
+      }
+    }
 
   private[graft] case class DgrepArgs(flags: Set[Char], pattern: String,
     limit: Option[Int], out: Option[String])

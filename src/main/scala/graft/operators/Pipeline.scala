@@ -287,7 +287,11 @@ object Pipeline {
       val t0 = System.nanoTime()
       // Occupancy-gated stage-cache width (r16, Tables.gatedParts): the
       // bound is the PARENT stage's materialized count (prevN, driver-
-      // known — rows only shrink through stages 1-8), so each persisted
+      // known). Rows only shrink through stages 1-8; stage 9 (pack)
+      // explodes window_id (one row per window a doc spans), so there
+      // prevN can be below the stage's output and the gate may give the
+      // last persisted stage too few partitions at small inputs (perf
+      // only, results are unaffected). Each persisted
       // stage output stops being a shuffle.partitions-wide cache whose
       // every later pass (the fused count+fp, the child kernel's map
       // side) schedules CPUS tasks over KB-scale partitions. coalesce,

@@ -1,8 +1,13 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.util.SerializableConfiguration
 
 /** The record model of the reference engine: a (key, value) string pair
   * (reference src/Streaming/worker.py:52-62 `encode_key_val`/`decode_key_val`,
@@ -100,17 +105,79 @@ object RainStormJob {
 
   /** Exactly-once text sink, the analogue of the leader's batched
     * `key:value` flush (src/Streaming/leader.py:248-284): one atomically
-    * renamed file per micro-batch, named by batchId so replays after
-    * failure overwrite instead of duplicating (idempotence replaces the
-    * reference's leader-side dedup, leader.py:241-246). */
+    * renamed directory `batch-<batchId>` per micro-batch, holding one
+    * `part-<partition>` text file (with its `.crc` sidecar) per non-empty
+    * partition of the batch. An empty batch yields an empty directory.
+    *
+    * The write is one Spark job. Each task writes its partition through
+    * the Hadoop FileSystem API to a per-attempt temp file and renames it
+    * into the hidden `_staging-batch-<batchId>` directory; the driver then
+    * deletes any `batch-<batchId>` an earlier attempt left and renames the
+    * staging directory into place. So a batch becomes visible whole or not
+    * at all, and a replay after failure replaces the batch instead of
+    * duplicating it, even when it runs with a different partition count
+    * (idempotence replaces the reference's leader-side dedup,
+    * leader.py:241-246). A stale staging directory from a crashed attempt
+    * is deleted before the job, never merged.
+    *
+    * Not `DataFrameWriter.text`: its commit protocol (job and task temp
+    * directories, per-task commit renames, `_SUCCESS`) and the Hadoop
+    * conf it ships with every task were most of a small batch's sink time
+    * (OPTIMIZATION_r18.md). */
   def textSink(outDir: String)(batch: Dataset[org.apache.spark.sql.Row],
       batchId: Long): Unit = {
     // Distributed write — records never funnel through the driver the way
     // every reference record funnels through the leader (leader.py:212-246).
-    // mode=overwrite on a batchId-named directory makes replays idempotent.
-    batch
+    val sc = batch.sparkSession.sparkContext
+    val conf = broadcastConf(sc)
+    val target = new Path(outDir, s"batch-$batchId")
+    val staging = new Path(outDir, s"_staging-batch-$batchId")
+    val fs = target.getFileSystem(sc.hadoopConfiguration)
+    fs.delete(staging, true)
+    if (!fs.mkdirs(staging))
+      throw new java.io.IOException(s"cannot create $staging")
+    val stagingDir = staging.toString
+    val rows = batch
       .select(concat_ws(":", batch.columns.map(col): _*).as("value"))
-      .write.mode("overwrite").text(s"$outDir/batch-$batchId")
+      .queryExecution.toRdd
+    sc.runJob(rows, (ctx: TaskContext, it: Iterator[InternalRow]) =>
+      if (it.hasNext) {
+        val dir = new Path(stagingDir)
+        val fs = dir.getFileSystem(conf.value.value)
+        val part = new Path(dir, f"part-${ctx.partitionId()}%05d")
+        val tmp = new Path(dir,
+          f".part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}.tmp")
+        // non-recursive (the builder's default): a straggler attempt
+        // cannot recreate a staging directory already renamed away
+        val os = fs.createFile(tmp).overwrite(true).build()
+        try {
+          try it.foreach { r => r.getUTF8String(0).writeTo(os); os.write('\n') }
+          finally os.close()
+        } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+        // a rename that loses to an earlier attempt of the same partition
+        // keeps that attempt's (identical) file
+        if (!fs.rename(tmp, part)) {
+          fs.delete(tmp, false)
+          if (!fs.exists(part))
+            throw new java.io.IOException(s"rename $tmp -> $part failed")
+        }
+      })
+    fs.delete(target, true)
+    if (!fs.rename(staging, target))
+      throw new java.io.IOException(s"rename $staging -> $target failed")
+  }
+
+  // The sink's Hadoop conf, broadcast once per live SparkContext rather
+  // than shipped with every task.
+  private var sinkConf: (SparkContext, Broadcast[SerializableConfiguration]) =
+    null
+
+  private def broadcastConf(
+      sc: SparkContext): Broadcast[SerializableConfiguration] = synchronized {
+    if (sinkConf == null || (sinkConf._1 ne sc))
+      sinkConf = (sc,
+        sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
+    sinkConf._2
   }
 
   /** Small-file compaction for a directory of per-batch outputs — the
@@ -119,6 +186,9 @@ object RainStormJob {
     * atomically-visible appends are periodically consolidated into few
     * large text files. At 100 TB this is the nightly job that keeps scan
     * partition counts sane.
+    *
+    * Inputs are the committed `batch-*` directories only; a sink's
+    * `_staging-batch-*` directory is neither read nor deleted.
     *
     * Crash-safe by manifest: the consolidated output is written to a
     * dot-prefixed staging dir (invisible to `batch-*` readers), a

@@ -131,6 +131,80 @@ class RainStormSpec extends AnyFunSuite {
     assert(readOut(out).sorted == before) // same records, fewer files
   }
 
+  test("textSink: a replayed batch id replaces the batch, staging never leaks") {
+    val out = new java.io.File(
+      Files.createTempDirectory("rs-sink").toFile, "out")
+    val rows = (0 until 40).map(i => (s"k$i", s"v$i")).toDF("key", "value")
+    val want = (0 until 40).map(i => s"k$i:v$i").sorted
+    val sink = RainStormJob.textSink(out.getPath) _
+    def files(b: String): Seq[String] =
+      new java.io.File(out, b).list().toSeq.sorted
+    def lines(b: String): Seq[String] =
+      readOut(new java.io.File(out, b)).sorted
+
+    // the replay of batch 7 runs with a different partition count: one
+    // copy of the rows, in the replay's single part file
+    sink(rows.repartition(4), 7L)
+    assert(files("batch-7").count(_.startsWith("part-")) == 4)
+    sink(rows.coalesce(1), 7L)
+    assert(lines("batch-7") == want)
+    assert(files("batch-7").count(_.startsWith("part-")) == 1)
+
+    // a crashed attempt's staging directory is replaced, not merged
+    val stale = new java.io.File(out, "_staging-batch-8"); stale.mkdirs()
+    Files.write(new java.io.File(stale, "part-00009").toPath,
+      "stale:row\n".getBytes("UTF-8"))
+    sink(rows.filter(col("key") === "k1"), 8L)
+    assert(lines("batch-8") == Seq("k1:v1"))
+
+    // an empty batch is an empty, visible directory
+    sink(rows.filter(lit(false)), 9L)
+    assert(files("batch-9").isEmpty)
+    assert(out.list().toSeq.sorted == Seq("batch-7", "batch-8", "batch-9"))
+
+    // compact() skips an in-flight staging directory and loses nothing
+    val inflight = new java.io.File(out, "_staging-batch-10")
+    inflight.mkdirs()
+    Files.write(new java.io.File(inflight, "part-00000").toPath,
+      "k99:v99\n".getBytes("UTF-8"))
+    assert(RainStormJob.compact(spark, out.getPath, targetFiles = 1) == 41)
+    assert(out.list().toSeq.sorted == Seq("_staging-batch-10", "compacted-1"))
+    assert(lines("compacted-1") == (want :+ "k1:v1").sorted)
+    assert(lines("_staging-batch-10") == Seq("k99:v99"))
+  }
+
+  test("rainstorm CLI listener prints one line per committed batch") {
+    val root = Files.createTempDirectory("rs-progress").toFile
+    val in = new java.io.File(root, "in"); in.mkdirs()
+    (0 until 3).foreach(w => writeCsv(in, w * 100, (w + 1) * 100))
+    val printed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = graft.cli.Main.batchProgress(printed.add(_))
+    spark.streams.addListener(listener)
+    try {
+      val q = RainStormJob.pipeline(
+          RainStormJob.lineSource(spark, in.getPath, maxFilesPerTrigger = 1),
+          RainStormApps.complexApp(2, "Wood", 1))
+        .writeStream.outputMode("update")
+        .foreachBatch(RainStormJob.textSink(
+          new java.io.File(root, "out").getPath) _)
+        .option("checkpointLocation", new java.io.File(root, "ckpt").getPath)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      // listener events are delivered asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (printed.size < 3 && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      val got = printed.toArray.toSeq.map(_.toString)
+      assert(got.size == 3)
+      got.zipWithIndex.foreach { case (l, i) =>
+        assert(l.matches(s"\\[rainstorm\\] batch $i: 100 input rows, " +
+          "addBatch \\d+ ms, walCommit \\d+ ms, commitOffsets \\d+ ms, " +
+          "state rows 4"), l)
+      }
+    } finally spark.streams.removeListener(listener)
+  }
+
   test("flatMapOp escape hatch matches reference flatMap contract") {
     val root = Files.createTempDirectory("rs-flatmap").toFile
     val in = new java.io.File(root, "in"); in.mkdirs()
