@@ -144,20 +144,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val runStartMs = System.currentTimeMillis()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER / SPARK_GRAFT_JARS: see graft.core.Topology —
-    // the multi-executor validation path (local-cluster[W,C,mem])
-    val spark = graft.core.Topology(graft.core.EngineConf(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Verify: keeps single-file table scans parallel at sf>=1.0,
-      // with the open-cost floor below the fixtures' 2 MB row groups so
-      // split planning can use them and mid-size tables scan wide
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "512k")
+    val spark = graft.core.EngineConf.builder("graft-bench")
       // Multi-hour single-context campaigns (sf8): shuffle FILES are
       // deleted by ContextCleaner only after their dependencies are
       // GC'd, and the default periodicGC interval is 30 MIN — on a big
@@ -166,7 +153,6 @@ object Bench {
       // usable). 2 min caps the dead-file window; per-query System.gc()
       // (below) handles the common case, this is the backstop.
       .config("spark.cleaner.periodicGC.interval", "2min")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

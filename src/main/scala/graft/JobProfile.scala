@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-only per-JOB profiler (not part of the driver contract; the r15
   * optimization round's measurement harness, guide §1).
@@ -11,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * a listener that prints one line per Spark JOB — duration, stage count,
   * task count, shuffle bytes — so a multi-action query's wall clock can be
   * attributed to its actions (persist materializations, collects, the
-  * final noop write) instead of guessed at. Mirrors Bench's session conf
-  * so numbers line up with the sidecars; JOBPROFILE_WARMUP=1 replicates
+  * final noop write) instead of guessed at. Uses the engine session
+  * (`EngineConf.builder`), as Bench does, so numbers line up with the sidecars; JOBPROFILE_WARMUP=1 replicates
   * Bench's all-queries sf0.001 warmup.
   */
 object JobProfile {
@@ -52,17 +51,7 @@ object JobProfile {
 
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.EngineConf(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.EngineConf.builder("graft-jobprofile").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     if (sys.env.get("JOBPROFILE_WARMUP").contains("1")) {
       val sib = new java.io.File(new java.io.File(d).getParentFile, "sf0.001")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,31 +11,9 @@ object Verify {
       case Array(s, o)    => (s, o, Set.empty[String])
       case Array(s, o, f) => (s, o, f.split(',').toSet)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the single-JVM default — the
-    // multi-executor validation runs this same gate under
-    // local-cluster[W,C,mem] (r14, VERDICT r13 next-#1): separate
-    // executor JVMs, real serialization on every broadcast/shuffle.
-    // SPARK_GRAFT_JARS must then carry the packaged graft jar (executors
-    // outside the driver JVM need the classes shipped).
-    val spark = graft.core.Topology(graft.core.EngineConf(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // single-file tables (driver layout) at sf>=1.0 are ~100 MB — under
-      // the 128 MB default every scan is ONE partition and starves the
-      // whole plan; 16 MB keeps local[N] scans at cluster parallelism
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      // the 4 MB default open-cost floors split size at 4 MB, which caps
-      // a 20 MB table at ~5 splits no matter its row-group layout; the
-      // fixtures are one file per table (no small-file amplification to
-      // guard against), so a 512 KB floor — below ScaleData's 2 MB row
-      // groups — lets mid-size tables scan at full width natively
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
-      .getOrCreate()
+    // SPARK_GRAFT_MASTER=local-cluster[W,C,mem] runs this same gate with
+    // separate executor JVMs (graft.core.Topology)
+    val spark = graft.core.EngineConf.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

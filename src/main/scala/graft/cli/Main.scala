@@ -17,16 +17,7 @@ import graft.streaming.{RainStormApps, RainStormJob, RainStormOp}
 object Main {
 
   private def session(name: String): SparkSession = {
-    val s = graft.core.EngineConf(SparkSession.builder())
-      .appName(name)
-      // spark-submit injects the real master on a cluster; default to
-      // local[*] so the CLI also runs standalone.
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val s = graft.core.EngineConf.builder(name)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

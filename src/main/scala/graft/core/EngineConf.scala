@@ -2,10 +2,12 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** Engine-level session settings, applied to the builder of every
-  * session the engine creates (Bench, Verify, JobProfile, PlanDump, the
-  * `graft.cli.Main` verbs, StreamScaleBench, the test session and the
-  * benchmark harness).
+/** How an engine session is configured. Every session the engine builds
+  * (Bench, Verify, JobProfile, PlanDump, the `graft.cli.Main` verbs,
+  * StreamScaleBench and the test session) comes from [[builder]]; the
+  * benchmark harness applies [[apply]] to its own builder. Site-only
+  * settings (Bench's `periodicGC` interval, StreamScaleBench's state
+  * store) are set on the returned builder at their site.
   *
   * `spark.sql.codegen.cache.maxEntries` sizes Spark's cache of compiled
   * generated classes, an LRU keyed by context classloader plus source
@@ -40,9 +42,29 @@ import org.apache.spark.sql.SparkSession
   * writes local checkpoints through Hadoop's FileSystem API instead of
   * `FileContext` (two process launches per file instead of ten) and
   * leaves every other filesystem on Spark's default manager.
+  *
+  * File splits: single-file tables at sf>=1.0 are ~100 MB, and under the
+  * 128 MB default every scan of one is a single partition that starves
+  * the whole plan; 16 MB keeps `local[N]` scans at cluster parallelism.
+  * The 4 MB default open cost floors the split size at 4 MB, which caps
+  * a 20 MB table at ~5 splits whatever its row-group layout; the
+  * fixtures are one file per table (no small-file amplification to
+  * guard against), so a 512 KB floor, below ScaleData's 2 MB row
+  * groups, lets split planning use the row groups and mid-size tables
+  * scan at full width.
+  *
+  * `nanosAsLong` makes `events.ts` readable when a fixture stores it as
+  * TIMESTAMP(NANOS); `Tables.normalizeEventTs` handles that and the
+  * other physical forms. Sessions run in UTC so date arithmetic matches
+  * the DuckDB oracle, and without the web UI.
   */
 object EngineConf {
   val CodegenCacheMaxEntries = 8192
+
+  /** Task slots of a local session: `SPARK_GRAFT_CPUS`, else the host's
+    * core count. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
 
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.codegen.cache.maxEntries",
@@ -52,4 +74,19 @@ object EngineConf {
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
     .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
       "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.files.maxPartitionBytes", "16m")
+    .config("spark.sql.files.openCostInBytes", "512k")
+    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  /** The engine's session builder: [[apply]], the master
+    * (`SPARK_GRAFT_MASTER`, else `local[cpus]`), one shuffle partition
+    * per slot, and the [[Topology]] plumbing a multi-executor master
+    * needs. */
+  def builder(app: String, cpus: Int = EngineConf.cpus): SparkSession.Builder =
+    Topology(apply(SparkSession.builder())
+      .appName(app)
+      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
+      .config("spark.sql.shuffle.partitions", cpus.toString))
 }

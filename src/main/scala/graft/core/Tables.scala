@@ -157,46 +157,7 @@ object Tables {
     * the extra job is pure overhead. Results are unchanged by
     * construction (same relation, materialized once instead of
     * N times). */
-  def mat(df: DataFrame): DataFrame = mat(df, "")
-
-  /** A/B-measurement plumbing for the barrier tradeoff (r16, VERDICT
-    * r15 next-#1/#3: the mat() class trades overlapped duplicate CPU
-    * for a serial barrier pass, and the keep/revert call was made on an
-    * IDLE box — the saturated-cluster arm needs the same binary to run
-    * both forms). `SPARK_GRAFT_MAT_OFF=all` disables every barrier;
-    * `SPARK_GRAFT_MAT_OFF=tag1,tag2` disables the named sites. Default
-    * (env unset) is byte-identical to the r15 behavior — this is a
-    * measurement switch, never a tuning knob: results are unchanged in
-    * either arm by mat()'s own construction. */
-  private lazy val matOff: Set[String] = sys.env.get("SPARK_GRAFT_MAT_OFF")
-    .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    .getOrElse(Set.empty)
-
-  def mat(df: DataFrame, tag: String): DataFrame =
-    if (matOff("all") || (tag.nonEmpty && matOff(tag))) df
-    else { df.count(); df }
-
-  /** Opt-IN barrier for the r15 measured-and-reverted candidate sites
-    * (dd03's expl/buckets/cand, gx01's jp/deg/ew): fires only when the
-    * tag (or `all`) is named in `SPARK_GRAFT_MAT_ON` — the contention
-    * campaign's second arm. Default (env unset) is a no-op, keeping the
-    * reverted sites exactly as r15 measured them. */
-  private lazy val matOn: Set[String] = sys.env.get("SPARK_GRAFT_MAT_ON")
-    .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    .getOrElse(Set.empty)
-
-  def matCand(df: DataFrame, tag: String): DataFrame =
-    if (matOn("all") || matOn(tag)) { df.count(); df } else df
-
-  /** [[matCand]] for candidate sites whose reverted form dropped the
-    * persist too (dd18/dd19's gram relation): arms persist+barrier
-    * together. Default (env unset) returns `df` untouched. */
-  def matCandPersist(df: DataFrame, tag: String): DataFrame =
-    if (matOn("all") || matOn(tag)) {
-      val p = df.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      p.count(); p
-    } else df
+  def mat(df: DataFrame): DataFrame = { df.count(); df }
 
   /** [[wide]] with a caller-chosen row floor — for map sides whose
     * per-row cost is far above shingle grade (dd03's 128-perm minhash

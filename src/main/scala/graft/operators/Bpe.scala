@@ -93,7 +93,7 @@ object Bpe {
     * the projection expression a step folds stays codegen-sized (<=
     * `batch` chained replaces) no matter how many thousand merges are
     * requested — the strategy the scaladoc promised for a ~30k-merge
-    * production vocabulary, exercised at 1k merges by BpeScaleBench.
+    * production vocabulary, exercised at 1k merges (BENCH_bpe1k.json).
     * Rebase changes WHERE the fold starts, never WHAT it computes:
     * replaces compose associatively over the encoding, so batched and
     * unbatched training emit the identical merge table (asserted by
@@ -102,10 +102,9 @@ object Bpe {
     * the old persisted generation is dropped only after the new one is
     * materialized, so at most two vocab relations ever coexist. */
   private[graft] def trainN(s: SparkSession, d: String, nMerges: Int,
-      batch: Int = 100,
-      onStep: (Int, Double) => Unit = (_, _) => ()): Seq[(String, String, Long)] =
+      batch: Int = 100): Seq[(String, String, Long)] =
     trainOnDocs(Tables.wide(s, d, "documents", "text"), nMerges, batch,
-      onStep, rowsHint = Tables.layout(s, s"$d/documents.parquet").rows)
+      rowsHint = Tables.layout(s, s"$d/documents.parquet").rows)
 
   /** [[trainN]] over an ARBITRARY docs relation carrying `text` — the
     * pipeline capstone trains its vocabulary on the staged (filtered,
@@ -113,7 +112,6 @@ object Bpe {
     * corpus, which is what a real tokenizer run sees. */
   private[graft] def trainOnDocs(docs: DataFrame, nMerges: Int,
       batch: Int = 100,
-      onStep: (Int, Double) => Unit = (_, _) => (),
       rowsHint: Long = -1L): Seq[(String, String, Long)] = {
     // Occupancy-gated width for the persisted vocab relation (r16,
     // Tables.gatedParts; rowsHint = the caller's measured doc count):
@@ -134,8 +132,7 @@ object Bpe {
     val merges = ArrayBuffer.empty[(String, String, Long)]
     val pending = ArrayBuffer.empty[(String, String)]
     var exhausted = false
-    for (step <- 1 to nMerges if !exhausted) {
-      val stepT0 = System.nanoTime()
+    for (_ <- 1 to nMerges if !exhausted) {
       val best = wf
         .select(col("freq"),
           applyMerges(col("enc"), pending.toSeq).as("em"))
@@ -170,7 +167,6 @@ object Bpe {
           pending.clear()
         }
       }
-      onStep(step, (System.nanoTime() - stepT0) / 1e9)
     }
     wf.unpersist(blocking = false)
     merges.toSeq

@@ -290,7 +290,7 @@ object Dedup {
     // feeds the probe side, the postings rebuild, and both verify join
     // sides) was REVERTED on measurement — with the occupancy-gated
     // widths above, the barrier pass lost on wall in BOTH regimes:
-    // idle 32c A/B (3 alternating pairs, SPARK_GRAFT_MAT_OFF=dd15)
+    // idle 32c A/B (3 alternating pairs, barrier switched off for dd15)
     // mat-on {1.65, 1.85, 1.67} vs mat-off {1.46, 1.72, 1.57} s, and
     // under a 16-core antagonist mat-off read <= mat-on as well
     // (OPTIMIZATION_r17.md). The persist stays (sequential reuse);
@@ -641,10 +641,6 @@ object Dedup {
       // B=20. The count() is one metadata-cheap job on the
       // already-persisted corpus.
       val B = Scale.lshPlanes(e.count())
-      // per-corpus whitened HASHING view (default off — see Whitening):
-      // candidate generation may move, every emitted pair is still
-      // exact-rescored on the raw vectors below
-      val hv = Whitening.hashingView(s, d, e)
       // RESCORE-IN-JOIN: the embedding and norm ride THROUGH the bucket
       // exchange, so the exact cosine is computed inline on each bucket
       // collision and the candidate RELATION never materializes. The
@@ -660,7 +656,7 @@ object Dedup {
       // candidate-bounded (a pair colliding in several tables scores
       // identically, so distinct collapses it exactly).
       val own = e.select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(sign_buckets(hv, B, L))
+        posexplode(sign_buckets(col("embedding"), B, L))
           .as(Seq("tbl", "bucket")))
       // probe own bucket + every 1-bit flip: catches any pair whose
       // bucket ids differ by <= 1 plane in some table
@@ -849,12 +845,10 @@ object Dedup {
       val idx = shingleIndex(s, d)
       // postings exploded once, for the verify step only (global df cap +
       // candidate postings) — signatures no longer need them
-      // matCand (r16): the reverted barrier, re-armable by env for the
-      // saturated-topology A/B (VERDICT r15 next-#1); default no-op
-      val expl = Tables.matCand(idx.filter(size(col("sh")) > 0)
+      val expl = idx.filter(size(col("sh")) > 0)
         .select(col("doc_id"), size(col("sh")).as("n"),
           explode(col("sh")).as("s"))
-        .persist(StorageLevel.MEMORY_AND_DISK), "dd03")
+        .persist(StorageLevel.MEMORY_AND_DISK)
       // Per-row single-pass signature via the native MinHashSig kernel —
       // bit-identical to the old 128-column min(xxhash64) aggregate (same
       // hash chain) and to the streaming formulation (DocPipeline), but
@@ -871,7 +865,7 @@ object Dedup {
               element_at(col("sig"), b * rowsPerBand + i + 1)) :+ lit(b): _*)
             .as("bh"))
       }
-      val buckets = Tables.matCand(sig.select(col("doc_id"),
+      val buckets = sig.select(col("doc_id"),
           explode(array(bandStructs: _*)).as("k"))
         .select(col("doc_id"), col("k.band"), col("k.bh"))
         // persisted: exchange reuse does NOT cover the self-join here
@@ -884,9 +878,8 @@ object Dedup {
         // (3 serial barrier passes vs duplicated-but-overlapped work:
         // quiet full run 3.65 -> 4.58 s, 8-core subset 3.51 -> 4.37 s)
         // and reverted; revisit on a saturated cluster where the
-        // duplicated passes displace real work. (r16: re-armable via
-        // SPARK_GRAFT_MAT_ON=dd03 for exactly that A/B — matCand.)
-        .persist(StorageLevel.MEMORY_AND_DISK), "dd03")
+        // duplicated passes displace real work (OPTIMIZATION_r19.md).
+        .persist(StorageLevel.MEMORY_AND_DISK)
       // band-bucket collisions; no distinct — the downstream left-semi
       // joins dedupe, and a distinct here is one more shuffle. The self
       // join is pinned to sort-merge: `buckets` is PER-DOCUMENT x 32
@@ -908,7 +901,6 @@ object Dedup {
           Tables.layout(s, s"$d/documents.parquet").rows)
         .map(candJ.coalesce).getOrElse(candJ)
         .persist(StorageLevel.MEMORY_AND_DISK)
-      Tables.matCand(cand, "dd03")
       // Exact verify on the candidate set only, and through the SAME
       // capped-postings kernel as dd02 (postings of candidate docs only,
       // stop-shingles pruned identically), so the MaxPostings df-cap can
@@ -1411,18 +1403,16 @@ object Dedup {
       // wall (quiet full run 2.34 -> 2.91 s; 8-core subset 2.40 ->
       // 3.00 s — the serial barrier costs more than the overlapped
       // duplicate) and reverted; revisit on a saturated cluster.
-      // (r16: re-armable via SPARK_GRAFT_MAT_ON=dd18 — matCandPersist.)
       // wideMin(1000) (r16): the L-token gram transform is a heavy
       // per-row pass run twice concurrently; occupancy width instead of
       // the 2-task scan width
-      val grams = Tables.matCandPersist(
-        Tables.wideMin(s, d, "documents", 1000, "doc_id", "text")
+      val grams = Tables.wideMin(s, d, "documents", 1000, "doc_id", "text")
         .select(col("doc_id"), split(col("text"), " ").as("w"))
         .filter(size(col("w")) >= L)
         .select(col("doc_id"), posexplode(expr(
           s"transform(sequence(0, size(w) - $L), " +
             s"p -> array_join(slice(w, p + 1, $L), ' '))")))
-        .toDF("doc_id", "p", "gram"), "dd18")
+        .toDF("doc_id", "p", "gram")
       val dup = grams.select(col("gram"), col("doc_id")).distinct()
         .groupBy(col("gram")).agg(count(lit(1)).as("nd"))
         .filter(col("nd") >= 2)
@@ -1463,13 +1453,13 @@ object Dedup {
         .select(col("doc_id"), split(col("text"), " ").as("w"))
       // same two-consumer fan-out as dd18 (census + join probe): the
       // persist+mat variant was measured slower on wall at sf0.1 and
-      // reverted — see dd18's note (r16: SPARK_GRAFT_MAT_ON=dd19 re-arms)
-      val grams = Tables.matCandPersist(base
+      // reverted — see dd18's note
+      val grams = base
         .filter(size(col("w")) >= L)
         .select(col("doc_id"), posexplode(expr(
           s"transform(sequence(0, size(w) - $L), " +
             s"p -> array_join(slice(w, p + 1, $L), ' '))")))
-        .toDF("doc_id", "p", "gram"), "dd19")
+        .toDF("doc_id", "p", "gram")
       val st = grams.select(col("gram"), col("doc_id")).distinct()
         .groupBy(col("gram"))
         .agg(min(col("doc_id")).as("md"), count(lit(1)).as("nd"))

@@ -119,10 +119,7 @@ object Graphs {
       // aggregate — a mat() barrier on jp/deg/ew was measured slower on
       // wall at sf0.1 (quiet full run 2.18 -> 2.48 s) and reverted: the
       // barrier only pays where the duplicated upstream is expensive.
-      // (r16: re-armable via SPARK_GRAFT_MAT_ON=gx01 for the saturated-
-      // topology A/B, VERDICT r15 next-#1 — default is a no-op.)
-      val jp = graft.core.Tables.matCand(
-        edgeTable(s, d).persist(StorageLevel.MEMORY_AND_DISK), "gx01")
+      val jp = edgeTable(s, d).persist(StorageLevel.MEMORY_AND_DISK)
       // occupancy-gated exchange widths (r16, Tables.keyedAt): deg and
       // ew are persisted relations consumed by every pagerank iteration
       // — at shuffle.partitions width each of the 5 iterations paid
@@ -133,18 +130,16 @@ object Graphs {
         graft.core.IndexStore.root(d) +
           s"/jp_tau${math.round(GxTau * 100)}").rows
       val e = edges(jp)
-      val deg = graft.core.Tables.matCand(
-        graft.core.Tables.keyedAt(s, edgeRows, e, col("u"))
+      val deg = graft.core.Tables.keyedAt(s, edgeRows, e, col("u"))
         .groupBy("u").agg(count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK), "gx01")
+        .persist(StorageLevel.MEMORY_AND_DISK)
       // degree pre-joined so each iteration reads (u, v, deg) straight
       // off the persisted partition-aligned probe; shuffle-hash, never
       // broadcast (deg is node-sized)
-      val ew = graft.core.Tables.matCand(
-        e.join(deg.hint("shuffle_hash"), "u")
+      val ew = e.join(deg.hint("shuffle_hash"), "u")
         .repartition(graft.core.Tables.gatedParts(s, edgeRows)
           .getOrElse(s.sessionState.conf.numShufflePartitions), col("u"))
-        .persist(StorageLevel.MEMORY_AND_DISK), "gx01")
+        .persist(StorageLevel.MEMORY_AND_DISK)
       var r = deg.select(col("u").as("node"), lit(Scale).as("r"))
       for (_ <- 1 to Iters) {
         r = ew.join(r.hint("shuffle_hash"), col("u") === col("node"))

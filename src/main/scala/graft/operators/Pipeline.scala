@@ -239,8 +239,7 @@ object Pipeline {
     * parent, never re-scan parquet). */
   private[graft] def run(s: SparkSession, d: String,
       keepFrames: Boolean = false)
-      : (Seq[(Int, String, Long, Long, Long)], Seq[(String, DataFrame)],
-         Seq[(String, DataFrame)]) = {
+      : (Seq[(Int, String, Long, Long, Long)], Seq[(String, DataFrame)]) = {
     // THE one corpus read of the whole job (read-once contract)
     val base = Tables.wide(s, d, "documents",
         "doc_id", "text", "lang", "source")
@@ -284,7 +283,6 @@ object Pipeline {
     // RDD, never the scratch it was built from.
     def stage(ord: Int, name: String, df: => DataFrame,
         fpParts: Seq[Column]): DataFrame = graft.core.CacheScope.scoped {
-      val t0 = System.nanoTime()
       // Occupancy-gated stage-cache width (r16, Tables.gatedParts): the
       // bound is the PARENT stage's materialized count (prevN, driver-
       // known). Rows only shrink through stages 1-8; stage 9 (pack)
@@ -309,9 +307,6 @@ object Pipeline {
       val (n, fp) = countAndFp(p, fpParts)
       val cut = org.apache.spark.sql.graftx.PlanCut.cut(p)
       lineage += ((ord, name, prevN, n, fp))
-      if (sys.props.get("graft.pp01.timing").contains("true"))
-        println(f"PP01TIME  $ord%2d $name%-14s mat+fp=${
-          (System.nanoTime() - t0) / 1e9}%7.2fs")
       frames += ((name, cut))
       persisted += ((name, p))
       prevN = n
@@ -351,7 +346,7 @@ object Pipeline {
     // every lineage row (counts + fingerprints) is already a driver-side
     // value; the last frame's blocks are dead weight too
     if (!keepFrames) livePrev.unpersist(blocking = false)
-    (lineage.toSeq, frames.toSeq, persisted.toSeq)
+    (lineage.toSeq, frames.toSeq)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -359,8 +354,6 @@ object Pipeline {
       import s.implicits._
       run(s, d)._1.toDF("ord", "stage", "rows_in", "rows_out", "out_fp")
     })
-  // (run's third element — the persisted pre-cut frames — exists for the
-  // probe/spec; queries only consume the lineage)
   )
 
   // ------------------------------------------------------------- oracle

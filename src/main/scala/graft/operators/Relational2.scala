@@ -200,6 +200,12 @@ object Relational2 {
     // Daily totals are exact decimal sums first, so the frame average is
     // arithmetic over identical doubles; rounded to absorb any frame
     // accumulation-order differences between engines.
+    // The frame's window has no partition, so every row goes through one
+    // task — the shape q28 refuses below. Here it is bounded: the window
+    // runs over `daily`, one row per order DATE, so its input is the
+    // calendar span of the orders (2,405 days in ScaleData's fixtures,
+    // about 2,400 for TPC-H's seven years), not the order count, at any
+    // scale factor. The per-order work is the distributed aggregate.
     "q27_moving_avg" -> ((s, d) => {
       val daily = Tables(s, d, "orders")
         .groupBy(col("o_orderdate").cast("date").as("day"))

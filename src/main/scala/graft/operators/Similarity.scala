@@ -430,15 +430,10 @@ object Similarity {
       // candidate-volume trend). Above the threshold the cache goes
       // DISK_ONLY: each slice re-reads it as sequential I/O instead of
       // holding N vectors resident in the heap the sort tasks need —
-      // the same lesson the slice checkpoints learned at 3.2M. Override
-      // with -Dgraft.sim09.ecache=mem|disk for A/B.
-      val eLevel = sys.props.get("graft.sim09.ecache") match {
-        case Some("mem")  => org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        case Some("disk") => org.apache.spark.storage.StorageLevel.DISK_ONLY
-        case _ => if (n > 2000000L)
-            org.apache.spark.storage.StorageLevel.DISK_ONLY
-          else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-      }
+      // the same lesson the slice checkpoints learned at 3.2M.
+      val eLevel =
+        if (n > 2000000L) org.apache.spark.storage.StorageLevel.DISK_ONLY
+        else org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       // mat(): e feeds the own-side bucket exchange and (through it) both
       // collision-join sides of one action — cold-cache concurrent
       // first-touch re-ran the scan+norm per branch (Tables.mat)
@@ -447,11 +442,8 @@ object Similarity {
           l2_norm(col("embedding")).as("nrm"))
         .persist(eLevel))
       val B = Scale.lshPlanes(n)
-      // per-corpus whitened HASHING view (default off — see Whitening):
-      // bucket ids may move, the rescore stays on the raw vectors
-      val hv = Whitening.hashingView(s, d, e)
       val own = e.select(col("vec_id"), col("embedding"), col("nrm"),
-        posexplode(sign_buckets(hv, B, L))
+        posexplode(sign_buckets(col("embedding"), B, L))
           .as(Seq("tbl", "bucket")))
       // SOURCE-SLICED SELECTION (r12): one partial-pass task holds at
       // most `covered` fully-retained source heaps under the byte
@@ -514,8 +506,7 @@ object Similarity {
                 col("bucket").bitwiseXOR(lit(1L << b))): _*))
                 .as("bucket"))
           val edges = probeS.as("x")
-            .join(own.hint(sys.props.getOrElse("graft.sim09.join",
-              "merge")).as("y"),
+            .join(own.hint("merge").as("y"),
               col("x.tbl") === col("y.tbl") &&
                 col("x.bucket") === col("y.bucket") &&
                 col("x.vec_id") =!= col("y.vec_id"))
@@ -565,12 +556,11 @@ object Similarity {
       // PLANS.md. Soundness: TopKPerGroup's scaladoc (a duplicate is
       // identical under the total order, so one representative
       // suffices; partial pruning needs k DISTINCT better keys).
-      // join strategy pinned to sort-merge; -Dgraft.sim09.join is the
-      // A/B knob the rejected shuffle_hash numbers were measured with
+      // join strategy pinned to sort-merge: shuffle_hash measured slower
       // (sf1 82.7 vs 66.3 s in r10; sf4 53.8 vs 30.3 s at r11 HEAD —
       // the build side is occupancy-uniform but large, and the merge
       // sort spills gracefully where the hash build cannot)
-      val edges = probe.as("x").join(own.hint(sys.props.getOrElse("graft.sim09.join", "merge")).as("y"),
+      val edges = probe.as("x").join(own.hint("merge").as("y"),
           col("x.tbl") === col("y.tbl") &&
             col("x.bucket") === col("y.bucket") &&
             col("x.vec_id") < col("y.vec_id"))

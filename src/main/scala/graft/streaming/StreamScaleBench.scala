@@ -80,7 +80,6 @@ object StreamScaleBench {
   def main(args: Array[String]): Unit = {
     val nDocs = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nNear = if (args.length > 1) args(1).toLong else 100000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional 3rd arg: near-dup join horizon. The DEFAULT store
     // (HDFSBacked) keeps live state as on-heap maps — at a long horizon
     // (hours of event time x 32 bands x 2 sides x 2 join stores) state
@@ -91,12 +90,7 @@ object StreamScaleBench {
     // stamps which one ran so A/Bs are self-describing.
     val horizon = if (args.length > 2) args(2) else "10 minutes"
     val store = sys.env.getOrElse("SPARK_GRAFT_STATE_STORE", "hdfs")
-    val spark = graft.core.EngineConf(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = graft.core.EngineConf.builder("graft-stream-scale")
       .config("spark.sql.streaming.stateStore.providerClass",
         if (store == "rocksdb")
           "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

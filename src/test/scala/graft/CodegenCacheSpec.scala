@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.internal.StaticSQLConf
+import graft.core.LocalCheckpointFileManager
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark's generated-class cache holds the q01-q33 family's working set:
@@ -26,6 +27,16 @@ class CodegenCacheSpec extends AnyFunSuite {
   test("the session's codegen cache cap is EngineConf's") {
     assert(spark.conf.get(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key) ==
       graft.core.EngineConf.CodegenCacheMaxEntries.toString)
+    // the other shared settings too: the test session is built by
+    // EngineConf.builder, like every engine session
+    val shared = Seq(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.files.maxPartitionBytes" -> "16m",
+      "spark.sql.files.openCostInBytes" -> "512k",
+      LocalCheckpointFileManager.ConfKey ->
+        classOf[LocalCheckpointFileManager].getName)
+    assert(shared.filter { case (k, v) => spark.conf.get(k) != v } == Nil)
   }
 
   test("a second pass over q01-q33 compiles no generated class") {

@@ -13,7 +13,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("pp01: lineage is complete, doc stages are monotone, counts chain") {
     spark.catalog.clearCache()
-    val (lineage, _, _) = operators.Pipeline.run(spark, sf)
+    val (lineage, _) = operators.Pipeline.run(spark, sf)
     // PERSIST-LIFECYCLE pin (r13 advisor: q6.unpersist targeted the cut
     // LogicalRDD frame — a silent no-op that leaked stage 6's blocks for
     // the rest of the run). unpersist removes the CacheManager entry
@@ -59,7 +59,7 @@ class PipelineSpec extends AnyFunSuite {
     val before = fileBytesRead
     // keepFrames: every frame's blocks are retained for the fresh-action
     // probes below (the r13 eager-unpersist lifecycle is off here)
-    val (_, frames, _) = operators.Pipeline.run(spark, sf, keepFrames = true)
+    val (_, frames) = operators.Pipeline.run(spark, sf, keepFrames = true)
     val delta = fileBytesRead - before
     try {
       assert(delta <= (docBytes * 1.25).toLong + (1 << 20),

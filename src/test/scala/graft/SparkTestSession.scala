@@ -23,17 +23,9 @@ import org.apache.spark.sql.SparkSession
   * carries the spark.jars + executor add-opens plumbing. */
 object SparkTestSession {
   def apply(): SparkSession = {
-    val s = graft.core.Topology(graft.core.EngineConf(SparkSession.builder())
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]"))
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // match Verify/Bench: open-cost floor below the fixtures' row-
-      // group size so split planning can use the row groups
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true"))
+    // local[4] whatever SPARK_GRAFT_CPUS says: the suites' partition
+    // and plan assertions are written against four slots
+    val s = graft.core.EngineConf.builder("graft-test", cpus = 4)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Direct-JVM runner for the graft mains (Bench/Verify/ScaleData/probes):
+# Direct-JVM runner for the graft mains (Bench/Verify/ScaleData/PlanDump):
 # same JDK-17 add-opens set as build.sbt, classpath = compiled classes +
 # the image's Spark jars. Avoids sbt's project lock so long background
 # runs (fixture generation, trend benches) don't block the dev loop.
@@ -15,5 +15,6 @@ done
 for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $OPENS -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC -cp "$CP" "$@"
+# EngineConf sets UTC for every engine session; ScaleData builds its own,
+# and the timestamps it writes follow the session time zone
+exec java $OPENS -Dspark.sql.session.timeZone=UTC -cp "$CP" "$@"
