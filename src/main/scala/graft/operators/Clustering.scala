@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import graft.core.ExactMeans
 import graft.functions.VectorFunctions.l2
 
 /** Lloyd's k-means over an embedding column — the real coarse quantizer
@@ -11,7 +11,8 @@ import graft.functions.VectorFunctions.l2
   * Deterministic by construction: initialization takes the k lowest
   * vec_ids (no RNG), assignment ties break on the lower centroid id, and
   * per-dimension means use exact scaled-integer sums (graft.core.Num
-  * pattern) so results do not depend on partitioning.
+  * pattern, computed by graft.core.ExactMeans in one shuffle-free job
+  * per iteration) so results do not depend on partitioning.
   *
   * Centroids live driver-side between iterations (k x dim doubles — tiny),
   * so assignment is a pure projection: k fused l2 evaluations against
@@ -26,6 +27,9 @@ import graft.functions.VectorFunctions.l2
   * inverted list its members were assigned to.
   */
 object Clustering {
+
+  /** Decimal grid of the exact centroid sums: floor(v * 1e10 + 0.5). */
+  private[operators] val MeanScale = 10
 
   /** Nearest-centroid id as a projection over literal centroids; keeps the
     * embedding column so callers need no join back to the corpus.
@@ -95,20 +99,12 @@ object Clustering {
 
     var it = 0
     while (it < iters) {
-      // new centroids: per-dimension means via exact scaled-long sums
-      // (order-independent; |v| <= O(1) so v*1e10 is far inside long range).
-      // k x dim result rows — collected and regrouped driver-side.
-      val rows = assign(ein, cents)
-        .select(col("cl"), posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("cl"), col("dim"))
-        .agg((sum(graft.core.Num.scaledLong(col("v").cast("double"), 10))
-          .cast("double") / 1e10 / count(lit(1))).as("cv"))
-        .collect()
-      // a cluster that loses all members drops out (k shrinks), matching
-      // Lloyd's on empty cells
-      cents = rows.groupBy(_.getInt(0)).toSeq.map { case (cl, rs) =>
-        (cl, rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
-      }.sortBy(_._1)
+      // new centroids: per-dimension exact scaled-long means in one
+      // shuffle-free job (graft.core.ExactMeans); a cluster that loses
+      // all members drops out (k shrinks), matching Lloyd's on empty cells
+      cents = ExactMeans(assign(ein, cents).select(col("cl"),
+          col("embedding")), MeanScale)
+        .toSeq.sortBy(_._1).map { case (cl, c) => (cl, c.means) }
       it += 1
     }
     (assign(ein, cents), s.createDataFrame(cents).toDF("cl", "cvec"))
@@ -141,7 +137,7 @@ object Clustering {
     * scaled-long means, lower-id tie-breaks at both levels. */
   /** Below this k the FLAT kernel wins and [[kmeansTwoLevelFull]]
     * delegates to it: each Lloyd pass has a k-INDEPENDENT scan-bound
-    * floor (the posexplode + (cl, dim) means aggregation — measured
+    * floor (then a posexplode + (cl, dim) means aggregation — measured
     * 13.4 s total flat train at sf2 of which assignment is ~1.3 s at
     * k=195), and two-level pays that machinery for BOTH levels
     * (measured 44.6 s at the same point — a 3x regression where the
@@ -203,19 +199,14 @@ object Clustering {
     while (it < iters) {
       // one corpus pass: coarse re-assign (projection over the cached
       // corpus) + grouped sub-assign + exact scaled-long means per
-      // (g, sub, dim); k*dim result rows collected, like the flat kernel
-      val rows = ca
-        .select(col("g"), assignSub.as("sub"),
-          posexplode(col("embedding")).as(Seq("dim", "v")))
-        .groupBy(col("g"), col("sub"), col("dim"))
-        .agg((sum(graft.core.Num.scaledLong(col("v").cast("double"), 10))
-          .cast("double") / 1e10 / count(lit(1))).as("cv"))
-        .collect()
-      cents = rows.groupBy(_.getInt(0)).view.mapValues(_.toSeq
-        .groupBy(_.getInt(1)).toSeq
-        .map { case (sub, rs) =>
-          (sub, rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq) }
-        .sortBy(_._1)).toMap
+      // (g, sub), keyed g * k2 + sub (sub ids are init ranks < k2)
+      val sums = ExactMeans(ca.select(
+          (col("g") * k2 + assignSub).as("key"),
+          col("embedding")), MeanScale)
+      cents = sums.toSeq.groupBy(_._1 / k2).map { case (g, subs) =>
+        g -> subs.map { case (key, c) => (key % k2, c.means) }
+          .sortBy(_._1)
+      }
       it += 1
     }
     // flat injective id: g * k2 + sub (sub ids are init ranks < k2)

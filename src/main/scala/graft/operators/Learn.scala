@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.storage.StorageLevel
-import graft.core.Tables
+import graft.core.{ExactMeans, Tables}
 
 /** Distributed learning over the corpus — the driver-coordinated
   * iterative-training operator class (aggregate statistics → driver
@@ -280,71 +280,54 @@ object Learn {
     (bk, bd)
   }
 
-  /** Integer-exact Lloyd's k-means: K=8 seeds = the lowest-vec_id
-    * embeddings, 5 unrolled iterations, centroid update = trunc
-    * division of exact micro sums. All arithmetic replays bit-for-bit
-    * in the oracle (trunc div contract pinned by LearnSpec); an empty
-    * cluster deterministically keeps its previous centroid in BOTH
-    * engines (COALESCE against the prior iterate), so the chain is
-    * total. Each iteration is ONE distributed pass: per-partition long
-    * partials (count + 64 sums per cluster — K·(Dim+1) numbers), merged
-    * as DECIMAL(38,0); the K×Dim centroid matrix lives driver-side as
-    * literals, the parameter-server pattern shared with tx28/em01.
-    * Per-partition partials stay in long range under the ENFORCED
-    * magnitude contract |x|,|c| ≤ 4e6 micro (checked in the hot loop)
-    * ⇒ |sum_j x| partial ≤ 4e6·2e6 rows = 8e12 « 2^63, and the
-    * census's per-row scaled inertia (dist div 1e6) is divided BEFORE
-    * summation — mirrored in the oracle — so no partial approaches
-    * 2^63. */
-  private def kmeansMicro(s: SparkSession, d: String)
-      : Option[Array[Array[Long]]] = {
+  /** Integer-exact Lloyd's k-means and its census: K=8 seeds = the
+    * lowest-vec_id embeddings, 5 unrolled iterations, centroid update =
+    * trunc division of exact micro sums, then one census pass under the
+    * converged centroids. All arithmetic replays bit-for-bit in the
+    * oracle (trunc div contract pinned by LearnSpec); an empty cluster
+    * deterministically keeps its previous centroid in BOTH engines
+    * (COALESCE against the prior iterate), so the chain is total.
+    *
+    * Every pass runs over the ONE persisted micro relation, and each is
+    * ONE shuffle-free job: the argmin is a typed projection and the
+    * per-cluster count + 64 sums are exact [[ExactMeans]] partials merged
+    * on the driver; the K×Dim centroid matrix lives driver-side, the
+    * parameter-server pattern shared with tx28/em01. The census's
+    * per-row scaled inertia (dist div 1e6) is divided BEFORE summation —
+    * mirrored in the oracle. `nearest`'s long distances stay in range
+    * under the ENFORCED magnitude contract |x|,|c| ≤ 4e6 micro.
+    *
+    * Returns (cluster, n_vecs, mean_sqdist_micro) for every non-empty
+    * cluster; empty for an empty corpus. */
+  private def kmeansCensus(s: SparkSession, d: String)
+      : Seq[(Long, Long, Long)] = {
     import s.implicits._
     val rows = microRows(s, d).persist()
-    val seeds = rows.orderBy(col("_1")).limit(KmK).collect()
-    if (seeds.isEmpty) { rows.unpersist(); return None }
-    // k = min(KmK, n): a corpus below K seeds clusters with what it
-    // has — the oracle's LIMIT takes the same prefix, so both engines
-    // run the identical smaller k instead of diverging by crash
-    var c = seeds.map(_._2.clone())
-    for (_ <- 1 to KmIters) {
-      val cb = c
-      val kk = cb.length
-      val partials = rows.mapPartitions { it =>
-        val cnt = new Array[Long](kk)
-        val sums = Array.ofDim[Long](kk, Dim)
-        var n = 0L
-        while (it.hasNext) {
-          val (_, x) = it.next()
-          val (k, _) = nearest(x, cb)
-          cnt(k) += 1L
-          var j = 0
-          while (j < Dim) { sums(k)(j) += x(j); j += 1 }
-          n += 1L
+    try {
+      val seeds = rows.orderBy(col("_1")).limit(KmK).collect()
+      // k = min(KmK, n): a corpus below K seeds clusters with what it
+      // has — the oracle's LIMIT takes the same prefix, so both engines
+      // run the identical smaller k instead of diverging by crash
+      var c = seeds.map(_._2.clone())
+      for (_ <- 1 to KmIters) {
+        val cb = c
+        val sums = ExactMeans(rows.map { case (_, x) =>
+          (nearest(x, cb)._1, x) }.toDF("k", "x"), 0)
+        c = Array.tabulate(cb.length) { k =>
+          sums.get(k) match {
+            case Some(m) => Array.tabulate(Dim)(j => (m.sum(j) / m.count(j)).toLong)
+            case None => cb(k) // empty: keep prior centroid
+          }
         }
-        require(n < 2000000L,
-          s"partition holds $n rows; re-split input below 2e6 rows/task")
-        (0 until kk).iterator.flatMap { k =>
-          Iterator.single((k, -1, cnt(k))) ++
-            (0 until Dim).iterator.map(j => (k, j, sums(k)(j)))
-        }
-      }.toDF("k", "j", "partial")
-        .groupBy("k", "j")
-        .agg(sum(col("partial").cast(DecimalType(38, 0))).as("m"))
-        .collect()
-      val n = new Array[BigInt](kk)
-      val sm = Array.fill(kk, Dim)(BigInt(0))
-      partials.foreach { r =>
-        val v = BigInt(r.getDecimal(2).toBigInteger)
-        if (r.getInt(1) == -1) n(r.getInt(0)) = v
-        else sm(r.getInt(0))(r.getInt(1)) = v
       }
-      c = Array.tabulate(kk) { k =>
-        if (n(k) == null || n(k) == 0) c(k) // empty: keep prior centroid
-        else Array.tabulate(Dim)(j => (sm(k)(j) / n(k)).toLong)
-      }
-    }
-    rows.unpersist()
-    Some(c)
+      val cf = c
+      ExactMeans(rows.map { case (_, x) =>
+          val (k, dist) = nearest(x, cf)
+          (k, Array(dist / Scale)) // per-row scale div, oracle-mirrored
+        }.toDF("k", "sq"), 0)
+        .toSeq.sortBy(_._1).map { case (k, m) =>
+          (k.toLong, m.count(0), (m.sum(0) / m.count(0)).toLong) }
+    } finally rows.unpersist()
   }
 
   // ---------------------------------------------------------------- tx28
@@ -553,24 +536,10 @@ object Learn {
     // assignment is one more distributed pass under the converged
     // literals; output is K rows.
     "em03_kmeans_census" -> ((s, d) => {
-      import s.implicits._
-      kmeansMicro(s, d) match {
-        case None =>
-          s.range(0).selectExpr("id AS cluster", "id AS n_vecs",
-            "id AS mean_sqdist_micro")
-        case Some(c) =>
-          microRows(s, d)
-            .map { case (_, x) =>
-              val (k, dist) = nearest(x, c)
-              (k.toLong, dist / Scale) // per-row scale div, oracle-mirrored
-            }
-            .toDF("cluster", "sq")
-            .groupBy("cluster")
-            .agg(count(lit(1)).as("n_vecs"),
-              sum(col("sq").cast(DecimalType(38, 0))).as("inertia"))
-            .selectExpr("cluster", "n_vecs",
-              "CAST(inertia div n_vecs AS BIGINT) AS mean_sqdist_micro")
-      }
+      // a local relation: the census is computed over the same cached
+      // micro rows as the Lloyd passes, then released
+      s.createDataFrame(kmeansCensus(s, d))
+        .toDF("cluster", "n_vecs", "mean_sqdist_micro")
     }),
 
     // Logistic quality classifier (rule-label distillation from surface

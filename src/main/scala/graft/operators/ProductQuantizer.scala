@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.core.Num
+import graft.core.ExactMeans
 
 /** Product quantization — the memory-side scale path for ANN search.
   *
@@ -17,10 +17,10 @@ import graft.core.Num
   * Shape, Spark-first:
   *  - **Training** learns M independent k-means codebooks, one per
   *    disjoint dimension slice. All M subspaces train JOINTLY: each Lloyd
-  *    iteration is ONE job over the persisted corpus (assign codes for
-  *    every subspace as a projection, explode to (subspace, code, dim),
-  *    one aggregate for the means) — not M separate k-means drivers, which
-  *    would cost M× the scans and M× the job round-trips.
+  *    iteration is ONE shuffle-free job over the persisted corpus (assign
+  *    codes for every subspace as a projection, explode to (subspace,
+  *    code, slice), exact per-key means) — not M separate k-means
+  *    drivers, which would cost M× the scans and M× the job round-trips.
   *  - **Encoding** is a pure projection (M argmin-over-literal-centroid
   *    `least()` chains) — no shuffle, no join, codegen end to end.
   *  - **Scoring** (asymmetric distance computation) joins nothing: the
@@ -70,22 +70,17 @@ object ProductQuantizer {
     while (it < iters) {
       // one job per iteration: all M codes from the native kernel, the
       // matching slice re-cut by subspace id, then exact scaled-long
-      // per-(subspace, code, dim) means. m*kc*dsub result rows (~1k
-      // doubles) — collected and regrouped driver-side.
-      val rows = e
+      // per-(subspace, code) means (graft.core.ExactMeans, keyed
+      // m * kc + code; code ids are init ranks < kc)
+      val sums = ExactMeans(e
         .select(col("embedding"),
           posexplode(codes(cents, dsub)).as(Seq("m", "code")))
-        .select(col("m"), col("code"),
-          posexplode(expr(s"transform(slice(embedding, m * $dsub + 1, " +
-            s"$dsub), x -> CAST(x AS DOUBLE))")).as(Seq("dim", "v")))
-        .groupBy(col("m"), col("code"), col("dim"))
-        .agg((sum(Num.scaledLong(col("v"), 10)).cast("double") / 1e10
-          / count(lit(1))).as("cv"))
-        .collect()
+        .select((col("m") * kc + col("code")).as("key"),
+          slice(col("embedding"), col("m") * dsub + 1, lit(dsub)).as("v")),
+        Clustering.MeanScale)
       cents = (0 until m).map { mi =>
-        rows.filter(_.getInt(0) == mi).groupBy(_.getInt(1)).toSeq
-          .map { case (j, rs) =>
-            (j, rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq) }
+        sums.toSeq.filter(_._1 / kc == mi)
+          .map { case (key, c) => (key % kc, c.means) }
           .sortBy(_._1)
       }
       it += 1

@@ -118,4 +118,20 @@ class Round8Spec extends AnyFunSuite {
     assert(extra <= math.max(2, exact.size / 20),
       s"$extra of ${exact.size} docs over-flagged — fpp far above spec")
   }
+
+  test("tx17: the executed plan holds no binary literal over 64 KiB") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.types.BinaryType
+    val df = SparkEntry.queries("tx17_bloom_decontaminate")(spark, sf)
+    assert(df.collect().nonEmpty)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val literals = helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+      case p => p.expressions.flatMap(_.collect {
+        case Literal(b: Array[Byte], BinaryType) => b.length })
+    }.flatten
+    spark.catalog.clearCache()
+    assert(literals.forall(_ <= 64 * 1024),
+      s"binary literals of ${literals.sorted.reverse.take(3)} bytes in the plan")
+  }
 }
