@@ -38,10 +38,16 @@ import org.apache.spark.sql.SparkSession
   * `parallelismFirst=false` serialized the compute-dense post-shuffle
   * stages.
   *
-  * Streaming checkpoints go through [[LocalCheckpointFileManager]], which
-  * writes local checkpoints through Hadoop's FileSystem API instead of
-  * `FileContext` (two process launches per file instead of ten) and
-  * leaves every other filesystem on Spark's default manager.
+  * `file:` paths resolve to [[LocalFs]], Hadoop's checksummed local
+  * filesystem with permissions set by a `chmod` syscall: without Hadoop's
+  * native library, its own local filesystem launches a `chmod` process
+  * for every new file, `.crc` and directory, on the driver and on every
+  * executor. Streaming checkpoints go through
+  * [[LocalCheckpointFileManager]], which writes local checkpoints through
+  * Hadoop's FileSystem API instead of `FileContext` (no process launch
+  * per file, against ten; `FileContext` still launches `readlink` for its
+  * symlink lookups) and leaves every other filesystem on Spark's default
+  * manager.
   *
   * File splits: single-file tables at sf>=1.0 are ~100 MB, and under the
   * 128 MB default every scan of one is a single partition that starves
@@ -69,6 +75,7 @@ object EngineConf {
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.codegen.cache.maxEntries",
       CodegenCacheMaxEntries.toString)
+    .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
     .config(LocalCheckpointFileManager.ConfKey,
       classOf[LocalCheckpointFileManager].getName)
     .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")

@@ -20,13 +20,15 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * scheme-less paths under the default `file:///` filesystem count as
   * local.
   *
-  * Why: without Hadoop's native library, the local filesystem launches a
-  * process for each permission change (`chmod` of a new file and of its
-  * `.crc`) and, under `FileContext`, for each symlink lookup (`readlink`,
-  * several per rename). One atomic checkpoint write launched ten
-  * processes and took ≈28 ms through `FileContext`, against two and
-  * ≈6 ms through the FileSystem API, and a micro-batch pays it once per
-  * log and per state-store delta (OPTIMIZATION_r18.md). Locally nothing
+  * Why: without Hadoop's native library, `FileContext` launches a
+  * `readlink` process for each symlink lookup, several per rename, and
+  * Hadoop's own local filesystem a `chmod` process for each new file and
+  * its `.crc`. One atomic checkpoint write launched ten processes and
+  * took ≈28 ms through `FileContext`, against two and ≈6 ms through the
+  * FileSystem API (OPTIMIZATION_r18.md); with [[LocalFs]], whose
+  * permissions are a syscall, the FileSystem API launches none, while
+  * `FileContext` still launches its `readlink`s. A micro-batch pays this
+  * once per log and per state-store delta. Locally nothing
   * is weakened: both managers
   * write a temp file and rename it, POSIX rename is atomic, and both check
   * for an existing destination before a no-overwrite rename. An

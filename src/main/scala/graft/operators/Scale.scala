@@ -130,7 +130,14 @@ object Scale {
     * offset job and the caller's window job both consume it; like every
     * per-query persist in this codebase, the session-level
     * `catalog.clearCache()` after each query releases it. Returns
-    * (tagged relation, offset column, grand total). */
+    * (tagged relation, offset column, grand total).
+    *
+    * The offsets are baked into the plan as a literal map, and its values
+    * differ run to run: Spark's `RangePartitioner` seeds its boundary
+    * sample from the RDD id, which depends on how many RDDs the context
+    * made before, so partition sizes move. Results stay exact because
+    * `order` is total: every boundary placement ranks the same rows the
+    * same way. `tools/plandiff.py` ignores the values, not the keys. */
   private def partitionOffsets(df: DataFrame, order: Seq[Column],
       value: Column, rowsHint: Long = -1L): (DataFrame, Column, Long) = {
     // rowsHint >= 0 enables the occupancy gate (r16, Tables.gatedParts):

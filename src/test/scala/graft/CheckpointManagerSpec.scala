@@ -2,12 +2,13 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.LocalCheckpointFileManager
+import graft.core.{LocalCheckpointFileManager, LocalFs}
 import graft.streaming.{RainStormApps, RainStormJob}
 
 /** The engine's checkpoint file manager: which manager each filesystem
@@ -45,7 +46,10 @@ class CheckpointManagerSpec extends AnyFunSuite {
     assert(new java.io.File(dir, "0").length() == 1)
   }
 
-  test("a checkpoint written under Spark's default manager restarts") {
+  /** A `complexApp` checkpoint and output written by `first`, then the
+    * same job restarted under the engine session: per key, the emitted
+    * running counts are exactly 1..n. */
+  private def restartsUnderEngine(first: SparkSession, ckptMustUse: Class[_]): Unit = {
     val root = Files.createTempDirectory("ckpt-compat").toFile
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out").getPath
@@ -56,18 +60,15 @@ class CheckpointManagerSpec extends AnyFunSuite {
         .mkString("\n").getBytes("UTF-8"))
     val ops = RainStormApps.complexApp(2, "x", 1)
 
-    val legacy = spark.newSession()
-    legacy.conf.unset(LocalCheckpointFileManager.ConfKey)
-    assert(chosen(legacy, ckpt).isInstanceOf[FileContextBasedCheckpointFileManager])
+    assert(ckptMustUse.isInstance(chosen(first, ckpt)))
     writeCsv(0, 300)
-    RainStormJob.start(legacy, in.getPath, ops, out, ckpt, stateful = true)
+    RainStormJob.start(first, in.getPath, ops, out, ckpt, stateful = true)
       .awaitTermination()
 
     writeCsv(300, 600)
     RainStormJob.start(spark, in.getPath, ops, out, ckpt, stateful = true)
       .awaitTermination()
 
-    // per key, the emitted running counts are exactly 1..n
     def parts(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles.toSeq.flatMap(parts)
       else if (f.getName.startsWith("part-")) Seq(f) else Nil
@@ -78,5 +79,28 @@ class CheckpointManagerSpec extends AnyFunSuite {
     val want = (0 until 600).filter(_ % 3 == 0).groupBy(i => s"k${i % 7}")
       .map { case (k, v) => k -> (1 to v.size) }
     assert(emitted == want)
+  }
+
+  test("a checkpoint written under Spark's default manager restarts") {
+    val legacy = spark.newSession()
+    legacy.conf.unset(LocalCheckpointFileManager.ConfKey)
+    restartsUnderEngine(legacy, classOf[FileContextBasedCheckpointFileManager])
+  }
+
+  test("a checkpoint written by Hadoop's own local filesystem restarts") {
+    // what `file:` resolves to without the engine's fs.file.impl
+    val stock = FileSystem.getFileSystemClass("file", new Configuration())
+    assert(stock != classOf[LocalFs])
+    // the shared SparkContext carries the engine's key, so the session
+    // names the stock class; uncached, so the engine's cached instance
+    // is neither returned nor replaced. The sink reads the SparkContext's
+    // Hadoop conf, so only the checkpoint comes from the stock class.
+    val plain = spark.newSession()
+    plain.conf.set("fs.file.impl", stock.getName)
+    plain.conf.set("fs.file.impl.disable.cache", "true")
+    val dir = Files.createTempDirectory("ckpt-stock").toString
+    assert(new Path(dir).getFileSystem(plain.sessionState.newHadoopConf())
+      .getClass == stock)
+    restartsUnderEngine(plain, classOf[FileSystemBasedCheckpointFileManager])
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.internal.StaticSQLConf
-import graft.core.LocalCheckpointFileManager
+import graft.core.{LocalCheckpointFileManager, LocalFs}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Spark's generated-class cache holds the q01-q33 family's working set:
@@ -34,6 +34,7 @@ class CodegenCacheSpec extends AnyFunSuite {
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.files.maxPartitionBytes" -> "16m",
       "spark.sql.files.openCostInBytes" -> "512k",
+      "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName,
       LocalCheckpointFileManager.ConfKey ->
         classOf[LocalCheckpointFileManager].getName)
     assert(shared.filter { case (k, v) => spark.conf.get(k) != v } == Nil)

@@ -10,8 +10,12 @@ expression ids (`#123`, `#123L`), `plan_id=N`, lambda variable suffixes
 identity hashes (`@1a2b3c4d`), and whole-stage-codegen ids
 (`[codegen id : N]`, `*(N)`), because Spark may number two independent
 codegen subtrees in either order (so which operators fuse into one stage
-is not compared), and the stage ids of AQE query stages (`Arguments: N`
-under a `...QueryStage` node), which follow the order stages finish in.
+is not compared), the stage ids of AQE query stages (`Arguments: N`
+under a `...QueryStage` node), which follow the order stages finish in,
+and the offsets of `Scale`'s per-partition offset maps (the `values`
+list of `element_at(map(keys: [...], values: [...]), __pid)`), which
+come from a sampled range partitioning; their keys are kept, so a change
+in partition count still shows.
 `--strip PREFIX` removes a path prefix (for example each
 checkout's root, which index paths contain). Prints a unified diff per
 differing query and a summary line; exits 1 when any query differs.
@@ -30,6 +34,8 @@ RULES = [
     (re.compile(r"@[0-9a-f]{6,8}\b"), "@H"),
     (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
     (re.compile(r"\*\(\d+\)"), "*(N)"),
+    (re.compile(r"(element_at\(map\(keys: \[[^\]]*\], values: )\[[^\]]*\]"
+                r"(\), __pid\b)"), r"\1[N]\2"),
 ]
 NODE = re.compile(r"^\(\d+\) ")
 STAGE_ID = re.compile(r"^Arguments: \d+$")
