@@ -67,12 +67,13 @@ object Bench {
 
   /** Run the streaming section in a fresh child JVM (same classpath and
     * JVM flags as this one, SPARK_GRAFT_STREAMING=only) and read its
-    * bench_streaming.json. Launched AFTER the batch passes, so the
-    * child's JVM holds nothing but the streaming micro-bench — the
-    * sidecars' quiet protocol, driven by the bench itself. Returns
-    * empty (distinct from a measured zero) if the child fails; its
-    * stdout/stderr land in bench_streaming_child.log. */
-  private def streamingInChild(): Seq[(String, Double)] = {
+    * bench_streaming.json: the rates and the dropped-rows field. Launched
+    * AFTER the batch passes, so the child's JVM holds nothing but the
+    * streaming micro-bench — the sidecars' quiet protocol, driven by the
+    * bench itself. Returns no rates (distinct from a measured zero) if
+    * the child fails; its stdout/stderr land in
+    * bench_streaming_child.log. */
+  private def streamingInChild(): (Seq[(String, Double)], String) = {
     import scala.jdk.CollectionConverters._
     try {
       val jvm = new java.io.File(new java.io.File(
@@ -90,18 +91,21 @@ object Bench {
       if (code != 0) {
         System.err.println(s"[bench] streaming child exited $code " +
           "(see bench_streaming_child.log)")
-        return Seq.empty
+        return (Seq.empty, "")
       }
       val json = new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("bench_streaming.json")), "UTF-8")
       // digits allowed in key names (e.g. a future win10s row) but not
       // leading — a truncated capture would silently corrupt the sidecar
-      """"([a-z][a-z0-9_]*)":([0-9.]+)""".r.findAllMatchIn(json)
+      val rates = """"([a-z][a-z0-9_]*)":([0-9.]+)""".r.findAllMatchIn(json)
         .map(m => m.group(1) -> m.group(2).toDouble)
         .filter(_._1 != "metric").toSeq
+      val dropped = ""","streaming_dropped":"(?:[^"\\]|\\.)*"""".r
+        .findFirstIn(json).getOrElse("")
+      (rates, dropped)
     } catch { case e: Exception =>
       System.err.println(s"[bench] streaming child failed: ${e.getMessage}")
-      Seq.empty
+      (Seq.empty, "")
     }
   }
 
@@ -169,10 +173,10 @@ object Bench {
     val streamMode = sys.env.getOrElse("SPARK_GRAFT_STREAMING", "child")
 
     if (streamMode == "only") {
-      val streaming = streamingMedianOf3(spark)
+      val (streaming, dropped) = streamingMedianOf3(spark)
       val streamJson = streaming.map { case (k, v) => s"\"$k\":${jnum(v)}" }
         .mkString("""{"metric":"streaming","streaming_rec_s":{""", ",",
-          s"""},"streaming_protocol":"child-jvm;median-of-3;host-swing see BENCH_streaming_ab.json",${windowJson(runStartMs)},"sf":"$sfDir"}""")
+          s"""},"streaming_protocol":"child-jvm;median-of-3;host-swing see BENCH_streaming_ab.json"$dropped,${windowJson(runStartMs)},"sf":"$sfDir"}""")
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_streaming.json"),
         (streamJson + "\n").getBytes("UTF-8"))
@@ -328,8 +332,8 @@ object Bench {
 
     // Streaming throughput in BASELINE.md's own units (output rec/s on the
     // reference's two canonical 10k-row apps; reference: ~84 rec/s simple).
-    val streaming = streamMode match {
-      case "skip"   => Seq.empty
+    val (streaming, dropped) = streamMode match {
+      case "skip"   => (Seq.empty, "")
       case "inline" => streamingMedianOf3(spark)
       case _        => streamingInChild()
     }
@@ -349,7 +353,7 @@ object Bench {
       .mkString(""","streaming_rec_s":{""", ",", "}") +
       (if (streaming.nonEmpty)
         s""","streaming_protocol":"$streamProtoHead;median-of-3;host-swing see BENCH_streaming_ab.json""""
-       else "")
+       else "") + dropped
     // Per-pass totals and code-generator compiles (its cache misses).
     // With the class cache sized to the working set (EngineConf) a timed
     // pass compiles only sources no earlier pass generated (tens at
@@ -424,10 +428,6 @@ object Bench {
     (r, c.getCount - c0)
   }
 
-  /** Streaming rates, best (max) of two temporally separated passes — the
-    * rate-metric mirror of the batch min-of-2: a host stall depresses a
-    * throughput measurement, so the max discards the stalled pass instead
-    * of reporting it as a regression on scale-invariant fixtures. */
   /** MEDIAN-of-3 (r14, VERDICT r13 "what's wrong" #1): the r13 artifact
     * carried max-of-2 rates measured as the tail of the round's heaviest
     * campaign — 2,925/720 rec/s where the same-HEAD quiet run read
@@ -437,20 +437,34 @@ object Bench {
     * rejects one bad pass outright and the protocol is stamped in the
     * JSON so consumers can tell the eras apart. (The child JVM already
     * isolates from the batch surface's heap; this addresses HOST-level
-    * co-running load.) */
-  private def streamingMedianOf3(spark: SparkSession): Seq[(String, Double)] =
+    * co-running load.)
+    *
+    * A row that cannot run (its input fixture is missing) is dropped
+    * alone; the others are still measured. Returns the rates and a
+    * `streaming_dropped` JSON field naming the dropped rows and why ("" when
+    * none). */
+  private def streamingMedianOf3(
+      spark: SparkSession): (Seq[(String, Double)], String) =
     try {
       val passes = (1 to 3).map { i =>
         if (i > 1) Thread.sleep(2000) // let fs/page-cache effects settle
         streamingRates(spark)
       }
-      passes.head.indices.map { j =>
-        val k = passes.head(j)._1
-        k -> passes.map(_(j)._2).sorted.apply(1)
+      val rows = passes.head.map(_._1).map { k =>
+        val runs = passes.map(_.toMap.apply(k))
+        k -> runs.collectFirst { case Left(why) => why }
+          .toLeft(runs.collect { case Right(v) => v }.sorted.apply(1))
       }
+      val dropped = rows.collect { case (k, Left(why)) => (k, why) }
+        .groupBy(_._2).toSeq
+        .map { case (why, ks) => ks.map(_._1).mkString("+") + ": " + why }
+        .sorted.mkString("; ")
+      (rows.collect { case (k, Right(v)) => (k, v) },
+        if (dropped.isEmpty) ""
+        else s""","streaming_dropped":"${jesc(dropped)}"""")
     } catch { case e: Throwable =>
       System.err.println(s"[bench] streaming bench failed: ${e.getMessage}")
-      Seq.empty }
+      (Seq.empty, "") }
 
   /** Measure BASELINE.md's four streaming rows end-to-end (10k-row CSV →
     * streaming job → text sink), in output rec/s, the reference's metric
@@ -466,8 +480,13 @@ object Bench {
     *    published workloads: pattern France → project(CustomerId,
     *    Surname); filter Gender=Female → count by IsActiveMember
     *    (ref ~330 / ~0.128).
+    *
+    * Each row is measured on its own: a row whose input file is absent
+    * (the reference fixture) comes back as Left(why) and the other rows
+    * still run.
     */
-  private def streamingRates(spark: SparkSession): Seq[(String, Double)] = {
+  private def streamingRates(
+      spark: SparkSession): Seq[(String, Either[String, Double])] = {
     import graft.streaming.{RainStormApps, RainStormJob, RainStormOp}
     import java.nio.file.Files
     val root = Files.createTempDirectory("bench-stream").toFile
@@ -483,15 +502,17 @@ object Bench {
     }
 
     def run(name: String, write: java.io.File => Unit,
-        ops: Seq[RainStormOp], stateful: Boolean): (String, Double) = {
+        ops: Seq[RainStormOp], stateful: Boolean): Either[String, Double] = {
       val in = new java.io.File(root, s"in-$name"); in.mkdirs()
-      write(in)
+      try write(in)
+      catch { case e: java.nio.file.NoSuchFileException =>
+        return Left(s"missing ${new java.io.File(e.getFile).getName}") }
       val out = new java.io.File(root, s"out-$name")
       val t0 = System.nanoTime()
       RainStormJob.start(spark, in.getPath, ops, out.getPath,
         new java.io.File(root, s"ckpt-$name").getPath, stateful)
         .awaitTermination()
-      name -> countOut(out) / ((System.nanoTime() - t0) / 1e9)
+      Right(countOut(out) / ((System.nanoTime() - t0) / 1e9))
     }
 
     // Warm the streaming machinery (class loading, codegen) off the clock.
@@ -514,14 +535,14 @@ object Bench {
           .mkString("\n").getBytes("UTF-8"))
 
     Seq(
-      run("simple_app", copyFixture,
+      "simple_app" -> run("simple_app", copyFixture,
         RainStormApps.simpleApp("Unpunched Telespar", 2, 3),
         stateful = false),
-      run("complex_app", copyFixture,
+      "complex_app" -> run("complex_app", copyFixture,
         RainStormApps.complexApp(3, "Stop", 8), stateful = true),
-      run("churn_simple", writeChurn,
+      "churn_simple" -> run("churn_simple", writeChurn,
         RainStormApps.simpleApp("France", 1, 2), stateful = false),
-      run("churn_complex", writeChurn,
+      "churn_complex" -> run("churn_complex", writeChurn,
         RainStormApps.complexApp(5, "Female", 11), stateful = true))
   }
 }

@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** How an engine session is configured. Every session the engine builds
-  * (Bench, Verify, JobProfile, PlanDump, the `graft.cli.Main` verbs,
+  * (Bench, Verify, PlanDump, the `graft.cli.Main` verbs,
   * StreamScaleBench and the test session) comes from [[builder]]; the
   * benchmark harness applies [[apply]] to its own builder. Site-only
   * settings (Bench's `periodicGC` interval, StreamScaleBench's state

@@ -278,6 +278,14 @@ object Fingerprints {
   /** DuckDB twin for the oracles. */
   def sqlContent(expr: String): String =
     s"md5(regexp_replace(trim(lower($expr)), '\\s+', ' ', 'g'))"
+
+  /** The portable hash bucket of a value: its md5's first 8 hex digits
+    * as an integer, mod `mod`. A pure function of the value, so samples,
+    * splits and snapshots built on it (tx07, tx16, tx19, dd12/16/17,
+    * pp01) are reproducible across runs, partitionings and engines; the
+    * oracles spell it `('0x' || substr(md5(v), 1, 8))::UBIGINT % mod`. */
+  def bucket(c: Column, mod: Long): Column =
+    conv(substring(md5(c.cast("string")), 1, 8), 16, 10).cast("long") % mod
 }
 
 object Num {

@@ -75,10 +75,21 @@ object Bpe {
 
   /** The k learned merges folded over an encoded column as literal
     * substring replaces — "|a||b|" → "|ab|", greedy left-to-right. */
-  private[graft] def applyMerges(enc: Column, merges: Seq[(String, String)]): Column =
+  private def applyMerges(enc: Column, merges: Seq[(String, String)]): Column =
     merges.foldLeft(enc) { case (e, (a, b)) =>
       call_function("replace", e, lit(s"|$a||$b|"), lit(s"|$a$b|"))
     }
+
+  /** tx30's segmentation of the token-array column `toks`: each word
+    * pipe-encoded, the words space-joined, the merges applied. */
+  private[graft] def segmented(toks: String,
+      merges: Seq[(String, String)]): Column =
+    applyMerges(expr(s"array_join(transform($toks, w -> $encExpr), ' ')"),
+      merges)
+
+  /** BPE tokens in the [[segmented]] column `em`: pipes / 2. */
+  private[graft] def tokenCount(em: String): Column =
+    expr(s"(length($em) - length(replace($em, '|', ''))) div 2")
 
   /** Train the merge table: (lhs, rhs, weighted pair count) per step.
     * One corpus scan builds the persisted word-frequency relation; each
@@ -190,20 +201,16 @@ object Bpe {
     // scan; tokens are counted as pipes/2 without re-splitting.
     "tx30_bpe_segment" -> ((s, d) => {
       val merges = train(s, d).map(m => (m._1, m._2))
-      val enc = expr(
-        "array_join(transform(toks, w -> regexp_replace(w, '(.)', '|$1|'))," +
-          " ' ')")
       Tables.wide(s, d, "documents", "lang", "text")
         .withColumn("toks", expr(TextAnalysis.tokensExpr))
-        .withColumn("em", applyMerges(enc, merges))
+        .withColumn("em", segmented("toks", merges))
         .groupBy("lang")
         .agg(
           count(lit(1)).as("n_docs"),
           sum(expr("size(toks)")).cast("long").as("n_words"),
           sum(expr("aggregate(transform(toks, t -> length(t)), 0L," +
             " (acc, x) -> acc + x)")).as("n_chars"),
-          sum(expr("(length(em) - length(replace(em, '|', ''))) div 2"))
-            .as("bpe_tokens"))
+          sum(tokenCount("em")).as("bpe_tokens"))
     })
   )
 

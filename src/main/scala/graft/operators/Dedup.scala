@@ -79,6 +79,14 @@ object Dedup {
     jaccardFrom(pairCounts(explPostings(idx)), idx)
   }
 
+  /** dd08's removal (dd10's and pp01's stage 2 too): `docs` without the
+    * non-representative members of the clusters in `members`
+    * (node, rep). */
+  private[graft] def withoutDuplicates(docs: DataFrame,
+      members: DataFrame): DataFrame =
+    docs.join(members.filter(col("node") =!= col("rep"))
+        .select(col("node").as("doc_id")), Seq("doc_id"), "left_anti")
+
   /** The Jaccard threshold every pair query/oracle in this family uses. */
   private val JaccardTau = 0.8
 
@@ -581,9 +589,8 @@ object Dedup {
 
   /** The md5 snapshot bucket shared by dd12/dd16/dd17: a pure function
     * of doc_id (>= 90 = the "new batch"). */
-  private def snapshotBucket(c: String): String =
-    s"CAST(conv(substring(md5(CAST($c AS STRING)), 1, 8), 16, 10) " +
-      s"AS BIGINT) % 100"
+  private def snapshotBucket(c: String): Column =
+    graft.core.Fingerprints.bucket(col(c), 100L)
 
   /** The EXISTING snapshot's postings (s, doc_id, n = exact shingle-set
     * size), materialized once per dataset under [[graft.core.IndexStore]]
@@ -597,7 +604,7 @@ object Dedup {
     val path = graft.core.IndexStore.root(d) + "/postings_old"
     if (!graft.core.IndexStore.ready(s, path)) {
       val post = shingleIndex(s, d)
-        .filter(expr(snapshotBucket("doc_id")) < 90)
+        .filter(snapshotBucket("doc_id") < 90)
         .select(col("doc_id"), size(col("sh")).as("n"),
           explode(col("sh")).as("s"))
       post.write.mode("overwrite").parquet(path)
@@ -941,14 +948,9 @@ object Dedup {
     // representative, min doc_id, is kept). Removal is an anti join on
     // doc_id — at 100 TB the removal list scales with the duplicate rate,
     // not the corpus, and the corpus-side scan prunes to three columns.
-    "dd08_dedup_corpus" -> ((s, d) => {
-      val removed = clusterMembers(s, d)
-        .filter(col("node") =!= col("rep"))
-        .select(col("node").as("doc_id"))
-      Tables(s, d, "documents")
-        .join(removed, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
+    "dd08_dedup_corpus" -> ((s, d) =>
+      withoutDuplicates(Tables(s, d, "documents"), clusterMembers(s, d))
+        .select(col("doc_id"), col("lang"), col("source"))),
 
     // dd06's census over the MATERIALIZED pair table (pairTable): pair
     // mining runs once per dataset; this entry pays only the CC stage +
@@ -962,14 +964,10 @@ object Dedup {
     // dd08's deduplicated corpus over the materialized pair table; the
     // corpus-side anti join is unchanged, the pair graph comes from
     // parquet. Same oracle as dd08.
-    "dd10_dedup_corpus_from_pairs" -> ((s, d) => {
-      val removed = clusterMembersFromPairs(pairTable(s, d))
-        .filter(col("node") =!= col("rep"))
-        .select(col("node").as("doc_id"))
-      Tables(s, d, "documents")
-        .join(removed, Seq("doc_id"), "left_anti")
-        .select(col("doc_id"), col("lang"), col("source"))
-    }),
+    "dd10_dedup_corpus_from_pairs" -> ((s, d) =>
+      withoutDuplicates(Tables(s, d, "documents"),
+          clusterMembersFromPairs(pairTable(s, d)))
+        .select(col("doc_id"), col("lang"), col("source"))),
 
     // Embedding-cosine near-dup pairs, EXACT: all ordered pairs above
     // threshold — the verification baseline dd07 is measured against
@@ -1181,19 +1179,16 @@ object Dedup {
     // pass that audit's lineage rule, which is exactly why this one is
     // pinned by hand. Only 16-byte fingerprints + ids cross the wire.
     "dd12_snapshot_dedup" -> ((s, d) => {
-      val bucket = expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) " +
-          "AS BIGINT) % 100")
+      val bucket = snapshotBucket("doc_id")
       // NULL fp for token-free docs (punctuation-only, non-Latin script):
       // md5('') would otherwise collide every contentless doc into one
       // spurious dup cluster. A NULL key never matches in the join, so
       // such docs come out is_dup=false — the only defensible semantics
       // for "no comparable content". (The oracle mirrors this with a
       // CASE ... END key and SQL's NULL-never-equal join rule.)
-      val fp = expr(
-        "CASE WHEN size(regexp_extract_all(lower(text), '[a-z0-9]+', 0)) " +
-          "> 0 THEN md5(CAST(array_join(slice(regexp_extract_all(" +
-          "lower(text), '[a-z0-9]+', 0), 1, 30), ' ') AS BINARY)) END")
+      val toks = TextAnalysis.tokensExpr
+      val fp = expr(s"CASE WHEN size($toks) > 0 " +
+        s"THEN md5(CAST(array_join(slice($toks, 1, 30), ' ') AS BINARY)) END")
       // persisted: the existing-side aggregate and the new-side probe
       // both consume this projection — one corpus text scan, not two
       // (16-byte fps + ids cached, never document bodies).
@@ -1266,10 +1261,9 @@ object Dedup {
     // the unchanged oracle).
     "dd16_incremental_neardup" -> ((s, d) => {
       val idx = shingleIndex(s, d)
-      def bk(c: String) = snapshotBucket(c)
       // flag computed once per DOCUMENT (pre-explode), not per posting
       val post = idx
-        .withColumn("is_new", expr(bk("doc_id")) >= 90)
+        .withColumn("is_new", snapshotBucket("doc_id") >= 90)
         .select(col("doc_id"), col("is_new"), size(col("sh")).as("n"),
           explode(col("sh")).as("s"))
       // Restrict the GROUPING, not just pair generation, to shingles the
@@ -1291,7 +1285,8 @@ object Dedup {
       // orientation (new side -> doc_id) re-derives the bucket on the
       // tiny pair relation; the XOR filter is a kernel-contract
       // assertion — every generated pair is cross-snapshot already
-      jp.withColumn("b1", expr(bk("d1"))).withColumn("b2", expr(bk("d2")))
+      jp.withColumn("b1", snapshotBucket("d1"))
+        .withColumn("b2", snapshotBucket("d2"))
         .filter((col("b1") < 90) =!= (col("b2") < 90))
         .select(
           when(col("b1") >= 90, col("d1")).otherwise(col("d2")).as("doc_id"),
@@ -1313,9 +1308,8 @@ object Dedup {
     // work — nothing scales with the corpus except the one-time build.
     "dd17_incremental_probe" -> ((s, d) => {
       val SatCap = org.apache.spark.sql.graftx.PairsWithinRatio.LenCap
-      def bk(c: String) = snapshotBucket(c)
       val newPost = Tables(s, d, "documents")
-        .filter(expr(bk("doc_id")) >= 90)
+        .filter(snapshotBucket("doc_id") >= 90)
         .select(col("doc_id"),
           org.apache.spark.sql.graftx.WordShinglesFunctions
             .word_shingles(col("text"), 3).as("sh"))
@@ -1357,7 +1351,8 @@ object Dedup {
               jac(col("s1.n").cast("long"), col("s2.n").cast("long")))
             .filter(col("jaccard") >= JaccardTau)
         }
-      jp.withColumn("b1", expr(bk("d1"))).withColumn("b2", expr(bk("d2")))
+      jp.withColumn("b1", snapshotBucket("d1"))
+        .withColumn("b2", snapshotBucket("d2"))
         .filter((col("b1") < 90) =!= (col("b2") < 90))
         .select(
           when(col("b1") >= 90, col("d1")).otherwise(col("d2")).as("doc_id"),
@@ -1406,13 +1401,9 @@ object Dedup {
       // wideMin(1000) (r16): the L-token gram transform is a heavy
       // per-row pass run twice concurrently; occupancy width instead of
       // the 2-task scan width
-      val grams = Tables.wideMin(s, d, "documents", 1000, "doc_id", "text")
-        .select(col("doc_id"), split(col("text"), " ").as("w"))
-        .filter(size(col("w")) >= L)
-        .select(col("doc_id"), posexplode(expr(
-          s"transform(sequence(0, size(w) - $L), " +
-            s"p -> array_join(slice(w, p + 1, $L), ' '))")))
-        .toDF("doc_id", "p", "gram")
+      val grams = seedGrams(
+        Tables.wideMin(s, d, "documents", 1000, "doc_id", "text")
+          .select(col("doc_id"), split(col("text"), " ").as("w")))
       val dup = grams.select(col("gram"), col("doc_id")).distinct()
         .groupBy(col("gram")).agg(count(lit(1)).as("nd"))
         .filter(col("nd") >= 2)
@@ -1447,53 +1438,18 @@ object Dedup {
     // through three shuffles; this plan moves only seed-grain rows and
     // one interval array per affected doc.
     "dd19_substring_dedup_corpus" -> ((s, d) => {
-      val L = SpanSeedLen
       // wideMin(1000) (r16): same rationale as dd18's gram build
       val base = Tables.wideMin(s, d, "documents", 1000, "doc_id", "text")
         .select(col("doc_id"), split(col("text"), " ").as("w"))
       // same two-consumer fan-out as dd18 (census + join probe): the
       // persist+mat variant was measured slower on wall at sf0.1 and
       // reverted — see dd18's note
-      val grams = base
-        .filter(size(col("w")) >= L)
-        .select(col("doc_id"), posexplode(expr(
-          s"transform(sequence(0, size(w) - $L), " +
-            s"p -> array_join(slice(w, p + 1, $L), ' '))")))
-        .toDF("doc_id", "p", "gram")
-      val st = grams.select(col("gram"), col("doc_id")).distinct()
-        .groupBy(col("gram"))
-        .agg(min(col("doc_id")).as("md"), count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2)
-      val noncanon = grams
-        .join(st.hint("shuffle_hash"), Seq("gram"))
-        .filter(col("doc_id") =!= col("md"))
-        .select(col("doc_id"), col("p"))
-      val byDoc = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("p").asc)
-      val iv = noncanon
-        .withColumn("pp", lag(col("p"), 1).over(byDoc))
-        .withColumn("ng",
-          when(col("pp").isNull || col("p") - col("pp") > L, 1L)
-            .otherwise(0L))
-        .withColumn("grp", sum(col("ng")).over(byDoc.rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)))
-        .groupBy(col("doc_id"), col("grp"))
-        .agg(min(col("p")).as("a"), (max(col("p")) + L - 1).as("b"))
-        .groupBy(col("doc_id"))
-        .agg(collect_list(struct(col("a"), col("b"))).as("iv"))
-      base.join(iv.hint("shuffle_hash"), Seq("doc_id"), "left_outer")
-        .withColumn("iv", coalesce(col("iv"),
-          expr("CAST(array() AS array<struct<a:int,b:int>>)")))
+      spanCut(base, seedGrams(base))
         .select(col("doc_id"),
           size(col("w")).cast("long").as("n_tok"),
           expr("aggregate(iv, 0, (acc, v) -> acc + v.b - v.a + 1)")
             .cast("long").as("n_cut"),
-          md5(expr(
-            "array_join(transform(filter(transform(w, (t, i) -> " +
-              "named_struct('i', i, 't', t)), " +
-              "x -> NOT exists(iv, v -> x.i >= v.a AND x.i <= v.b)), " +
-              "x -> x.t), ' ')")).as("clean_fp"))
+          md5(spanCleaned).as("clean_fp"))
     })
   )
 
@@ -1504,6 +1460,60 @@ object Dedup {
     * many tokens are extracted with exact offsets. The paper's 50-token
     * threshold scaled to this corpus's 25-70-token documents. */
   val SpanSeedLen = 15
+
+  /** dd18/dd19's seed stage: every [[SpanSeedLen]]-word window of `w`
+    * (the text split on single spaces) as (doc_id, p, gram), p the
+    * window's first word (0-based). */
+  private[graft] def seedGrams(words: DataFrame): DataFrame = {
+    val L = SpanSeedLen
+    words.filter(size(col("w")) >= L)
+      .select(col("doc_id"), posexplode(expr(
+        s"transform(sequence(0, size(w) - $L), " +
+          s"p -> array_join(slice(w, p + 1, $L), ' '))")))
+      .toDF("doc_id", "p", "gram")
+  }
+
+  /** dd19's cut: `words` with `iv`, the merged word intervals [a, b]
+    * covered by its non-canonical seeds (a seed gram held by >= 2 docs,
+    * in any doc but the least doc_id holding it), empty for an uncut
+    * doc. `grams` is [[seedGrams]] of `words`; the caller decides
+    * whether it is persisted, because it feeds two consumers. */
+  private[graft] def spanCut(words: DataFrame, grams: DataFrame): DataFrame = {
+    val L = SpanSeedLen
+    val st = grams.select(col("gram"), col("doc_id")).distinct()
+      .groupBy(col("gram"))
+      .agg(min(col("doc_id")).as("md"), count(lit(1)).as("nd"))
+      .filter(col("nd") >= 2)
+    val noncanon = grams
+      .join(st.hint("shuffle_hash"), Seq("gram"))
+      .filter(col("doc_id") =!= col("md"))
+      .select(col("doc_id"), col("p"))
+    val byDoc = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("doc_id")).orderBy(col("p").asc)
+    val iv = noncanon
+      .withColumn("pp", lag(col("p"), 1).over(byDoc))
+      .withColumn("ng",
+        when(col("pp").isNull || col("p") - col("pp") > L, 1L)
+          .otherwise(0L))
+      .withColumn("grp", sum(col("ng")).over(byDoc.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding,
+        org.apache.spark.sql.expressions.Window.currentRow)))
+      .groupBy(col("doc_id"), col("grp"))
+      .agg(min(col("p")).as("a"), (max(col("p")) + L - 1).as("b"))
+      .groupBy(col("doc_id"))
+      .agg(collect_list(struct(col("a"), col("b"))).as("iv"))
+    words.join(iv.hint("shuffle_hash"), Seq("doc_id"), "left_outer")
+      .withColumn("iv", coalesce(col("iv"),
+        expr("CAST(array() AS array<struct<a:int,b:int>>)")))
+  }
+
+  /** A [[spanCut]] row's cleaned text: the words outside every interval,
+    * rejoined with single spaces. */
+  private[graft] val spanCleaned: Column = expr(
+    "array_join(transform(filter(transform(w, (t, i) -> " +
+      "named_struct('i', i, 't', t)), " +
+      "x -> NOT exists(iv, v -> x.i >= v.a AND x.i <= v.b)), " +
+      "x -> x.t), ' ')")
 
   /** dd05's exact-pair kernel restricted to the audit sample (see
     * [[DdAuditSample]]), as a DuckDB CTE. */

@@ -17,22 +17,36 @@ import graft.core.Tables
   * ancestor of exactly this shape):
   *
   *   1 quality        tx02's keep predicate (>= 40 tokens, TTR >= 0.25)
+  *                    [TextAnalysis.qualityKept]
   *   2 dedup          dd08: >= 0.8 shingle-Jaccard clusters on the
   *                    SURVIVING corpus, keep the min-id representative
+  *                    [Dedup.jaccardPairsOf, clusterMembersFromPairs,
+  *                    withoutDuplicates]
   *   3 span_dedup     dd19: cut every >= 15-token run shared with an
   *                    earlier doc; text is REWRITTEN (cleaned)
+  *                    [Dedup.seedGrams, spanCut, spanCleaned]
   *   4 decontaminate  tx13 vs the src0 benchmark (benchmark shingles
   *                    come from the ORIGINAL corpus — the eval suite is
   *                    external and does not get quality-filtered);
   *                    benchmark-source docs leave the corpus here too
+  *                    [TextAnalysis.contamination]
   *   5 mixture        tx19's deterministic source-weighted sampling,
   *                    weights computed on the staged corpus
+  *                    [TextAnalysis.mixtureSample]
   *   6 split_train    tx16's hash split, train (90%) kept
+  *                    [graft.core.Fingerprints.bucket]
   *   7 shuffle        tx20's seeded global permutation (md5("42:"+id))
+  *                    [TextAnalysis.shuffleOrder]
   *   8 bpe_segment    tx29/tx30: a 10-merge BPE vocabulary trained ON
   *                    THE STAGED CORPUS, applied per doc -> n_bpe
+  *                    [Bpe.trainOnDocs, segmented, tokenCount]
   *   9 pack           tx18's C=512 windows over the exact global token
   *                    cumsum IN SHUFFLE ORDER (stages 7-9 compose)
+  *                    [TextAnalysis.packWindows]
+  *
+  * The bracketed kernel of each stage is the function its standalone
+  * query calls, so a fix lands in both; this file adds only each
+  * stage's persists, column choices and lineage.
   *
   * Output = the lineage table: one row per stage with rows_in/rows_out
   * and a 60-bit ORDER-INDEPENDENT fingerprint of the stage's output
@@ -48,8 +62,8 @@ import graft.core.Tables
   * Scale shape (the 100 TB question): the corpus is read ONCE into a
   * persisted base relation; every stage chains from the previous
   * stage's persisted output (the job never re-reads parquet — asserted
-  * by the spec on the final stage's plan). Stage kernels are the same
-  * audited ones the standalone queries run: bounded inverted-index pair
+  * by the spec on the final stage's plan). The kernels are the audited
+  * ones the standalone queries run: bounded inverted-index pair
   * generation, driver union-find only under the 1M-edge guard, span df
   * via one shuffle, broadcast-able mixture/threshold relations
   * (|sources| rows), globalRank/globalCumsum instead of no-partition
@@ -58,71 +72,20 @@ import graft.core.Tables
   */
 object Pipeline {
 
-  /** Packing window size (tx18's C). */
-  val PackC = 512L
-
-  private def toksCol = expr(TextAnalysis.tokensExpr)
-
-  /** Stage 1 — tx02's keep predicate. */
-  private def quality(docs: DataFrame): DataFrame =
-    docs.withColumn("__t", toksCol)
-      .filter(size(col("__t")) >= 40 &&
-        size(array_distinct(col("__t"))).cast("double") /
-          size(col("__t")) >= 0.25)
-      .drop("__t")
-
-  /** Stage 2 — dd08's near-dup cluster removal on the staged corpus. */
-  private def dedup(docs: DataFrame): DataFrame = {
-    val removed = Dedup.clusterMembersFromPairs(Dedup.jaccardPairsOf(docs))
-      .filter(col("node") =!= col("rep"))
-      .select(col("node").as("doc_id"))
-    docs.join(removed, Seq("doc_id"), "left_anti")
-  }
+  import TextAnalysis.PackC
 
   /** Stage 3 — dd19's span cut, emitting the CLEANED text (the
     * standalone dd19 emits its md5; downstream stages need the words). */
   private def spanDedup(docs: DataFrame): DataFrame = {
-    val L = Dedup.SpanSeedLen
-    import org.apache.spark.sql.expressions.Window
     val base = docs.select(col("doc_id"), col("lang"), col("source"),
       split(col("text"), " ").as("w"))
     // persisted + mat() inside the stage's CacheScope: grams feeds the
     // seed census and the join probe side concurrently (dd19's shape —
     // see Tables.mat); one generation pass instead of two
     val grams = Tables.mat(graft.core.CacheScope.track(
-      base.filter(size(col("w")) >= L)
-      .select(col("doc_id"), posexplode(expr(
-        s"transform(sequence(0, size(w) - $L), " +
-          s"p -> array_join(slice(w, p + 1, $L), ' '))")))
-      .toDF("doc_id", "p", "gram")
-      .persist(StorageLevel.MEMORY_AND_DISK)))
-    val st = grams.select(col("gram"), col("doc_id")).distinct()
-      .groupBy(col("gram"))
-      .agg(min(col("doc_id")).as("md"), count(lit(1)).as("nd"))
-      .filter(col("nd") >= 2)
-    val noncanon = grams.join(st.hint("shuffle_hash"), Seq("gram"))
-      .filter(col("doc_id") =!= col("md"))
-      .select(col("doc_id"), col("p"))
-    val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("p").asc)
-    val iv = noncanon
-      .withColumn("pp", lag(col("p"), 1).over(byDoc))
-      .withColumn("ng",
-        when(col("pp").isNull || col("p") - col("pp") > L, 1L)
-          .otherwise(0L))
-      .withColumn("grp", sum(col("ng")).over(byDoc.rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("p")).as("a"), (max(col("p")) + L - 1).as("b"))
-      .groupBy(col("doc_id"))
-      .agg(collect_list(struct(col("a"), col("b"))).as("iv"))
-    base.join(iv.hint("shuffle_hash"), Seq("doc_id"), "left_outer")
-      .withColumn("iv", coalesce(col("iv"),
-        expr("CAST(array() AS array<struct<a:int,b:int>>)")))
-      .select(col("doc_id"),
-        expr("array_join(transform(filter(transform(w, (t, i) -> " +
-          "named_struct('i', i, 't', t)), " +
-          "x -> NOT exists(iv, v -> x.i >= v.a AND x.i <= v.b)), " +
-          "x -> x.t), ' ')").as("text"),
+      Dedup.seedGrams(base).persist(StorageLevel.MEMORY_AND_DISK)))
+    Dedup.spanCut(base, grams)
+      .select(col("doc_id"), Dedup.spanCleaned.as("text"),
         col("lang"), col("source"))
   }
 
@@ -139,77 +102,20 @@ object Pipeline {
       corp.select(col("doc_id"),
           explode(g.word_shingles(col("text"), 3)).as("sg"))
         .persist(StorageLevel.MEMORY_AND_DISK))
-    val bad = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
-      .join(sh.join(broadcast(bench), Seq("sg"), "left_semi")
-          .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit")),
-        Seq("doc_id"), "left_outer")
-      .filter(round(coalesce(col("n_hit"), lit(0L)).cast("double") /
-        col("n_sh"), 6) >= 0.5)
-      .select(col("doc_id"))
+    val bad = TextAnalysis.contamination(sh, bench)
+      .filter(col("contaminated")).select(col("doc_id"))
     // shingle-less docs (fully span-cut) never reach `sh` and are KEPT
     // (contamination 0) — the oracle's left-join mirrors this
     corp.join(bad, Seq("doc_id"), "left_anti")
   }
 
-  private def md5Bucket(mod: Long): Column = expr(
-    "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) " +
-      s"AS BIGINT) % $mod")
-
-  /** Stage 5 — tx19's deterministic mixture sampling, weights from the
-    * staged corpus's own source census. The thresholds come from tx19's
-    * shared [[TextAnalysis.mixtureThresholds]] (r15): the census is
-    * |sources|-bounded, so the old tw -> m -> th chain of three
-    * dependent one-row aggregates (three sequential broadcast
-    * materializations per run) is now exact driver arithmetic over one
-    * collected census — identical integers, one job instead of four. */
-  private def mixture(docs: DataFrame): DataFrame =
-    TextAnalysis.mixtureThresholds(docs) match {
-      case None => docs.filter(lit(false))
-        .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      case Some(th) =>
-        docs.filter(md5Bucket(1048576L) < element_at(th, col("source")))
-          .select(col("doc_id"), col("text"), col("lang"), col("source"))
-    }
-
-  /** Stage 7 — tx20's seeded permutation as an exact distributed rank.
-    * `rows` = the materialized input stage's count (driver-known), the
-    * occupancy-gate bound for the rank kernel's ranged persist (r16). */
-  private def shuffle(docs: DataFrame, rows: Long): DataFrame = {
-    val key = md5(concat(lit("42:"), col("doc_id").cast("string"))
-      .cast("binary"))
-    Scale.globalRank(docs.withColumn("skey", key),
-        Seq(col("skey"), col("doc_id")), rowsHint = rows)
-      .withColumnRenamed("__rank", "pos")
-      .drop("__n")
-  }
-
   /** Stage 8 — the staged-vocabulary BPE applied per doc. */
   private def segment(docs: DataFrame,
-      merges: Seq[(String, String)]): DataFrame = {
-    val enc = expr(
-      "array_join(transform(__t, w -> regexp_replace(w, '(.)', '|$1|'))," +
-        " ' ')")
-    docs.withColumn("__t", toksCol)
-      .withColumn("__em", Bpe.applyMerges(enc, merges))
-      .withColumn("n_bpe",
-        expr("CAST((length(__em) - length(replace(__em, '|', ''))) " +
-          "div 2 AS BIGINT)"))
+      merges: Seq[(String, String)]): DataFrame =
+    docs.withColumn("__t", expr(TextAnalysis.tokensExpr))
+      .withColumn("__em", Bpe.segmented("__t", merges))
+      .withColumn("n_bpe", Bpe.tokenCount("__em"))
       .drop("__t", "__em")
-  }
-
-  /** Stage 9 — tx18's windows over the cumsum in SHUFFLE order.
-    * `rows` = the input stage's driver-known count (gate bound, r16). */
-  private def pack(seg: DataFrame, rows: Long): DataFrame =
-    Scale.globalCumsum(
-        seg.filter(col("n_bpe") > 0)
-          .select(col("doc_id"), col("pos"), col("n_bpe")),
-        Seq(col("pos")), col("n_bpe"), rowsHint = rows)
-      .withColumn("window_id", explode(expr(
-        s"sequence((__cum - n_bpe) DIV $PackC, (__cum - 1) DIV $PackC)")))
-      .select(col("doc_id"), col("window_id"),
-        (least(col("__cum"), (col("window_id") + lit(1L)) * PackC) -
-          greatest(col("__cum") - col("n_bpe"),
-            col("window_id") * PackC)).as("win_tokens"))
 
   /** Order-independent 60-bit relation fingerprint: bit_xor over rows of
     * the md5-prefix integer of the canonical ':'-joined row string.
@@ -322,15 +228,20 @@ object Pipeline {
     // base is materialized (count above) — sever it too, so stage 1 and
     // decontaminate's probe side plan over a one-leaf cached scan
     val baseCut = org.apache.spark.sql.graftx.PlanCut.cut(base)
-    val q1 = stage(1, "quality", quality(baseCut), docFp)
-    val q2 = stage(2, "dedup", dedup(q1), docFp)
+    val q1 = stage(1, "quality", TextAnalysis.qualityKept(baseCut), docFp)
+    val q2 = stage(2, "dedup", Dedup.withoutDuplicates(q1,
+      Dedup.clusterMembersFromPairs(Dedup.jaccardPairsOf(q1))), docFp)
     val q3 = stage(3, "span_dedup", spanDedup(q2), docFp)
     val q4 = stage(4, "decontaminate", decontaminate(q3, baseCut), docFp)
     if (!keepFrames) base.unpersist(blocking = false)
-    val q5 = stage(5, "mixture", mixture(q4), docFp)
-    val q6 = stage(6, "split_train",
-      q5.filter(md5Bucket(100L) < 90), docFp)
-    val q7 = stage(7, "shuffle", shuffle(q6, prevN),
+    // the stage-5 threshold census is |sources|-bounded: one collect,
+    // exact driver arithmetic ([[TextAnalysis.mixtureThresholds]])
+    val q5 = stage(5, "mixture", TextAnalysis.mixtureSample(q4), docFp)
+    val q6 = stage(6, "split_train", q5.filter(
+      graft.core.Fingerprints.bucket(col("doc_id"), 100L) < 90), docFp)
+    // prevN, the input stage's driver-known count, bounds the occupancy
+    // gate of the rank and cumsum kernels' ranged persists (r16)
+    val q7 = stage(7, "shuffle", TextAnalysis.shuffleOrder(q6, prevN),
       Seq(col("doc_id"), col("pos")))
     val merges = Bpe.trainOnDocs(q6, Bpe.Merges, rowsHint = prevN)
       .map(m => (m._1, m._2))
@@ -341,7 +252,9 @@ object Pipeline {
         _._2.unpersist(blocking = false))
     val q8 = stage(8, "bpe_segment", segment(q7, merges),
       Seq(col("doc_id"), col("n_bpe")))
-    stage(9, "pack", pack(q8, prevN),
+    stage(9, "pack", TextAnalysis.packWindows(
+        q8.select(col("doc_id"), col("pos"), col("n_bpe")),
+        Seq(col("pos")), "n_bpe", prevN),
       Seq(col("doc_id"), col("window_id"), col("win_tokens")))
     // every lineage row (counts + fingerprints) is already a driver-side
     // value; the last frame's blocks are dead weight too

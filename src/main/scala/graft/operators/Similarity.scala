@@ -405,19 +405,10 @@ object Similarity {
 
   /** sim09's raw kNN graph (src, rank, dst, cos_r) — the scale path.
     *
-    * CLUSTER GUIDANCE (r13 verdict "what's wrong" #3): the default
-    * eager-slice mode trades S-1 extra own-side exchange writes and ONE
-    * driver-side `System.gc()` per slice for a peak-disk bound of ~1/S
-    * of candidate volume — the right trade on a host whose LOCAL disk
-    * is the binding constraint (every number in BENCH_sim09_trend.json).
-    * On a real cluster the full GC is a driver latency cliff (every
-    * slice pauses the scheduler for a heap walk) and fleet-scaled
-    * shuffle storage usually makes the disk bound moot: run with
-    * `-Dgraft.sim09.eagerSlices=false` there — the one-job form keeps
-    * ReusedExchange sharing the own-side exchange across slices and
-    * never touches the GC. Row output is identical either way
-    * (Round13Spec pins it). */
-  def knnGraphLsh(s: SparkSession, d: String): DataFrame = {
+    * `slices` is the source-slice count S; 0 sizes it from the heap
+    * budget (below). Sliced and one-pass selections emit the same rows
+    * (Round12Spec pins it). */
+  def knnGraphLsh(s: SparkSession, d: String, slices: Int = 0): DataFrame = {
       import org.apache.spark.sql.graftx.functions.{dot_product, l2_norm}
       import org.apache.spark.sql.graftx.SignBucketsFunctions.sign_buckets
       val L = 8
@@ -468,12 +459,10 @@ object Similarity {
       // it. S adapts to the same budget the heaps use: more heap or
       // more executors => fewer slices; a cluster with enough
       // aggregate memory runs S = 1 and keeps the halved kernel.
-      // -Dgraft.sim09.slices overrides for A/B (1 = force-unsliced).
       val covered = org.apache.spark.sql.graftx.TopKPerGroupExec
         .coveredPartialGroups(K + RankSlack, 32)
-      val S = sys.props.get("graft.sim09.slices").map(_.toInt)
-        .filter(_ > 0)
-        .getOrElse(math.max(1, math.ceil(n / (0.75 * covered)).toInt))
+      val S = if (slices > 0) slices
+        else math.max(1, math.ceil(n / (0.75 * covered)).toInt)
       if (S > 1) {
         val raw2 = dot_product(col("x.embedding"), col("y.embedding")) /
           (col("x.nrm") * col("y.nrm"))
@@ -482,21 +471,17 @@ object Similarity {
         // tracked the FULL candidate volume even though memory was
         // bounded — measured as the 1.6M-vector wall (67 GB of live
         // spill, run aborted; BENCH_sim09_trend.json n1600k_attempt).
-        // Eager mode (default when S > 1) runs each slice as its own
-        // job: localCheckpoint materializes the slice's bounded heap
-        // output (<= K+slack rows per source — tiny) and TRUNCATES the
-        // RDD lineage, making the slice's ShuffleDependencies
-        // unreachable; the post-slice GC hands them to ContextCleaner,
-        // which deletes their files before the next slice runs. Peak
-        // disk falls from ~candidate volume to ~1/S of it (one slice's
-        // probe exchange + the own-side exchange, re-executed per slice
-        // now that there is no single plan for ReusedExchange to share
-        // — the S-1 extra own writes are the price of the 1/S peak).
-        // Trade-off: a truncated slice cannot recompute on block loss;
-        // on a multi-executor cluster with fleet-scaled shuffle storage,
-        // -Dgraft.sim09.eagerSlices=false restores the one-job form.
-        val eager = sys.props.getOrElse("graft.sim09.eagerSlices", "true")
-          .toBoolean
+        // Each slice runs as its own job: localCheckpoint
+        // materializes the slice's bounded heap output (<= K+slack rows
+        // per source — tiny) and TRUNCATES the RDD lineage, making the
+        // slice's ShuffleDependencies unreachable; the post-slice GC
+        // hands them to ContextCleaner, which deletes their files before
+        // the next slice runs. Peak disk falls from ~candidate volume to
+        // ~1/S of it (one slice's probe exchange + the own-side exchange,
+        // re-executed per slice now that there is no single plan for
+        // ReusedExchange to share — the S-1 extra own writes are the
+        // price of the 1/S peak). A truncated slice cannot recompute on
+        // block loss.
         val perSlice = (0 until S).map { si =>
           val probeS = own
             .filter(pmod(col("vec_id"), lit(S.toLong)) === si)
@@ -514,21 +499,19 @@ object Similarity {
               col("y.vec_id").as("dst"), raw2.as("c"))
           val sel = Scale.topKPerGroupDistinct(edges, Seq("src"),
             K + RankSlack, Seq("dst"), col("c").desc, col("dst").asc)
-          if (eager) {
-            // DISK_ONLY: each slice's output is read exactly once by the
-            // rerank union, so memory-caching it buys nothing — and at
-            // 3.2M vectors the S accumulating MEMORY_AND_DISK checkpoint
-            // blocks plus the e cache squeezed 32 concurrent sort tasks
-            // into a measured 8 g OOM; on disk they cost ~rows x 30 B of
-            // sequential I/O instead of the execution pool's headroom.
-            val mat = sel.localCheckpoint(eager = true,
-              org.apache.spark.storage.StorageLevel.DISK_ONLY)
-            // the slice plan just became unreachable; a prompt GC lets
-            // ContextCleaner delete its shuffle files NOW, which is the
-            // whole point of the per-slice job
-            System.gc()
-            mat
-          } else sel
+          // DISK_ONLY: each slice's output is read exactly once by the
+          // rerank union, so memory-caching it buys nothing — and at
+          // 3.2M vectors the S accumulating MEMORY_AND_DISK checkpoint
+          // blocks plus the e cache squeezed 32 concurrent sort tasks
+          // into a measured 8 g OOM; on disk they cost ~rows x 30 B of
+          // sequential I/O instead of the execution pool's headroom.
+          val mat = sel.localCheckpoint(eager = true,
+            org.apache.spark.storage.StorageLevel.DISK_ONLY)
+          // the slice plan just became unreachable; a prompt GC lets
+          // ContextCleaner delete its shuffle files NOW, which is the
+          // whole point of the per-slice job
+          System.gc()
+          mat
         }
         graphRerank(perSlice.reduce(_ union _))
       } else {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
-import graft.core.{Tables, Num}
+import graft.core.{Fingerprints, Tables, Num}
 
 /** Text-analysis operators for a training-data pipeline: token counting,
   * quality scoring, language-ID heuristics, and content fingerprinting.
@@ -47,9 +47,7 @@ object TextAnalysis {
   private[graft] def mixtureThresholds(docs: DataFrame): Option[Column] = {
     val stats = docs.groupBy(col("source"))
       .agg(count(lit(1)).as("n"))
-      .withColumn("w",
-        expr("CAST(conv(substring(md5(source), 1, 8), 16, 10) " +
-          "AS BIGINT) % 3 + 1"))
+      .withColumn("w", Fingerprints.bucket(col("source"), 3L) + 1)
       .collect()
       .flatMap(r => Option(r.get(0)).map(src =>
         (src.asInstanceOf[String], r.getLong(1), r.getLong(2))))
@@ -62,6 +60,63 @@ object TextAnalysis {
       }: _*))
     }
   }
+
+  /** tx19's mixture sample of `docs` (pp01's stage 5): the docs whose
+    * md5 bucket of 2^20 falls under their source's threshold in
+    * [[mixtureThresholds]]; no rows when `docs` is empty. */
+  private[graft] def mixtureSample(docs: DataFrame): DataFrame =
+    mixtureThresholds(docs) match {
+      case None => docs.filter(lit(false))
+      case Some(th) => docs.filter(Fingerprints.bucket(col("doc_id"),
+        1048576L) < element_at(th, col("source")))
+    }
+
+  /** tx02's keep verdict from a doc's token count and distinct-token
+    * count: at least `minTokens` tokens and a type-token ratio of at
+    * least `minTtr`. */
+  private def keeps(nTok: Column, nTypes: Column, minTokens: Int = 40,
+      minTtr: Double = 0.25): Column =
+    nTok >= minTokens && nTypes.cast("double") / nTok >= minTtr
+
+  /** The docs tx02 marks `keep`, with their columns unchanged: pp01's
+    * stage 1 and the streaming gate (`DocPipeline.qualityFilter`). */
+  def qualityKept(docs: DataFrame, minTokens: Int = 40,
+      minTtr: Double = 0.25): DataFrame =
+    docs.withColumn("__t", expr(tokensExpr))
+      .filter(keeps(size(col("__t")), size(array_distinct(col("__t"))),
+        minTokens, minTtr))
+      .drop("__t")
+
+  /** tx20's seeded permutation of `docs` (pp01's stage 7): adds
+    * `shuffle_key` = md5("42:" + doc_id) and `pos`, the exact 1-based
+    * global rank in (shuffle_key, doc_id) order. `docs` is persisted
+    * inside the rank kernel, so carry only the columns needed after. */
+  private[graft] def shuffleOrder(docs: DataFrame, rowsHint: Long): DataFrame =
+    Scale.globalRank(
+        docs.withColumn("shuffle_key",
+          md5(concat(lit("42:"), col("doc_id").cast("string")).cast("binary"))),
+        Seq(col("shuffle_key"), col("doc_id")), rowsHint = rowsHint)
+      .withColumnRenamed("__rank", "pos")
+      .drop("__n")
+
+  /** Sequence-packing window size in tokens (tx18's and pp01's C). */
+  val PackC = 512L
+
+  /** tx18's packing (pp01's stage 9): the docs with `tokens` > 0 laid end
+    * to end in the total order `order` and cut into [[PackC]]-token
+    * windows, one (doc_id, window_id, win_tokens) row per window a doc
+    * overlaps. The offsets are an exact distributed running sum
+    * ([[Scale.globalCumsum]], which persists its input). */
+  private[graft] def packWindows(docs: DataFrame, order: Seq[Column],
+      tokens: String, rowsHint: Long): DataFrame =
+    Scale.globalCumsum(docs.filter(col(tokens) > 0), order, col(tokens),
+        rowsHint = rowsHint)
+      .withColumn("window_id", explode(expr(
+        s"sequence((__cum - $tokens) DIV $PackC, (__cum - 1) DIV $PackC)")))
+      .select(col("doc_id"), col("window_id"),
+        (least(col("__cum"), (col("window_id") + lit(1L)) * PackC) -
+          greatest(col("__cum") - col(tokens), col("window_id") * PackC))
+          .as("win_tokens"))
 
   /** The (doc_id, source, sg) word-trigram shingle relation tx13/tx17
     * share — persisted and force-materialized (Tables.mat) because every
@@ -119,10 +174,17 @@ object TextAnalysis {
 
   /** tx13's exact decontamination over an already-persisted shingle
     * relation — shared with tx17 (one shingle pass, one persist). */
-  private def decontaminateFrom(sh: DataFrame): DataFrame = {
-      val bench = sh.filter(col("source") === "src0")
-        .select(col("sg")).distinct()
-      val corp = sh.filter(col("source") =!= "src0")
+  private def decontaminateFrom(sh: DataFrame): DataFrame =
+    contamination(sh.filter(col("source") =!= "src0"),
+      sh.filter(col("source") === "src0").select(col("sg")).distinct())
+
+  /** tx13's contamination kernel (pp01's stage 4): per doc of `corp`
+    * (doc_id, sg), its shingle count n_sh, how many of them are in
+    * `bench` (one distinct `sg` column, broadcast) as n_shared, that
+    * share to 6 dp, and the >= 0.5 verdict. A doc without shingles has
+    * no row. */
+  private[graft] def contamination(corp: DataFrame,
+      bench: DataFrame): DataFrame = {
       val tot = corp.groupBy(col("doc_id")).agg(count(lit(1)).as("n_sh"))
       val shr = corp.join(broadcast(bench), Seq("sg"), "left_semi")
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_shared0"))
@@ -163,8 +225,7 @@ object TextAnalysis {
           col("n_tok"),
           (col("n_types").cast("double") / col("n_tok")).as("ttr"),
           (col("n_stop").cast("double") / col("n_tok")).as("stop_ratio"),
-          when(col("n_tok") >= 40 and
-            col("n_types").cast("double") / col("n_tok") >= 0.25, "keep")
+          when(keeps(col("n_tok"), col("n_types")), "keep")
             .otherwise("drop").as("verdict"))
     }),
 
@@ -231,9 +292,7 @@ object TextAnalysis {
     // Spark-internal) — which also makes it exactly DuckDB-oracled. At
     // 100 TB this is one scan with a codegen'd predicate, no state.
     "tx07_stratified_sample" -> ((s, d) => {
-      val bucket = expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) " +
-          "AS BIGINT) % 100")
+      val bucket = Fingerprints.bucket(col("doc_id"), 100L)
       Tables(s, d, "documents")
         .filter(col("lang") =!= "en" || bucket < 50)
         .groupBy(col("lang")).agg(count(lit(1)).as("n_sampled"))
@@ -534,9 +593,7 @@ object TextAnalysis {
     // doc_id), unlike randomSplit/sample whose draws shift with
     // partitioning. One scan + a (lang x split)-sized aggregate.
     "tx16_corpus_split" -> ((s, d) => {
-      val bucket = expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) " +
-          "AS BIGINT) % 100")
+      val bucket = Fingerprints.bucket(col("doc_id"), 100L)
       Tables(s, d, "documents")
         .withColumn("split",
           when(bucket < 90, "train").when(bucket < 95, "val")
@@ -596,23 +653,14 @@ object TextAnalysis {
     // per-partition windows + a partition-count-bounded offset collect),
     // and the window fan-out is a narrow sequence() explode of ~n_tok/C
     // rows per doc — one range exchange total, linear in total tokens.
-    "tx18_sequence_pack" -> ((s, d) => {
-      val C = 512
-      val toks = Tables(s, d, "documents")
-        .select(col("doc_id"),
-          expr(s"CAST(size($tokensExpr) AS BIGINT)").as("n_tok"))
-        .filter(col("n_tok") > 0)
+    "tx18_sequence_pack" -> ((s, d) =>
       // rowsHint (r16): the ranged persist gets an occupancy-gated width
       // from the documents footer rows; no-op at >= 1k docs/core
-      Scale.globalCumsum(toks, Seq(col("doc_id")), col("n_tok"),
-          rowsHint = Tables.layout(s, s"$d/documents.parquet").rows)
-        .withColumn("window_id", explode(
-          expr(s"sequence((__cum - n_tok) DIV $C, (__cum - 1) DIV $C)")))
-        .select(col("doc_id"), col("window_id"),
-          (least(col("__cum"), (col("window_id") + lit(1L)) * C) -
-            greatest(col("__cum") - col("n_tok"), col("window_id") * C))
-            .as("win_tokens"))
-    }),
+      packWindows(Tables(s, d, "documents")
+          .select(col("doc_id"),
+            expr(s"CAST(size($tokensExpr) AS BIGINT)").as("n_tok")),
+        Seq(col("doc_id")), "n_tok",
+        rowsHint = Tables.layout(s, s"$d/documents.parquet").rows)),
 
     // Mixture rebalancing sample: hit a target source mixture (integer
     // weights w_s, here derived from the source id) WITHOUT upsampling —
@@ -631,19 +679,9 @@ object TextAnalysis {
     // from md5(source) (not a parse of the id's digits) so ANY source
     // string gets a weight — a non-numeric id would parse to NULL in
     // Spark (silently skewing the mixture) but raise in DuckDB.
-    "tx19_mixture_sample" -> ((s, d) => {
-      val docs = Tables(s, d, "documents")
-      val bucket = expr(
-        "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 8), 16, 10) " +
-          "AS BIGINT) % 1048576")
-      mixtureThresholds(docs) match {
-        case None => docs.filter(lit(false))
-          .select(col("doc_id"), col("source"))
-        case Some(th) =>
-          docs.filter(bucket < element_at(th, col("source")))
-            .select(col("doc_id"), col("source"))
-      }
-    }),
+    "tx19_mixture_sample" -> ((s, d) =>
+      mixtureSample(Tables(s, d, "documents"))
+        .select(col("doc_id"), col("source"))),
 
     // Deterministic training-order shuffle: the last shaping step before
     // sequence packing — a seeded global permutation of the corpus so
@@ -655,15 +693,10 @@ object TextAnalysis {
     // row_number + partition-count-bounded offsets, never the
     // no-partition window funnel the plan audit rejects. doc_id is the
     // tie-break so the order is total even under md5 collisions.
-    "tx20_corpus_shuffle" -> ((s, d) => {
-      val key = md5(concat(lit("42:"), col("doc_id").cast("string"))
-        .cast("binary"))
-      val docs = Tables(s, d, "documents")
-        .select(col("doc_id"), key.as("shuffle_key"))
-      Scale.globalRank(docs, Seq(col("shuffle_key"), col("doc_id")),
+    "tx20_corpus_shuffle" -> ((s, d) =>
+      shuffleOrder(Tables(s, d, "documents").select(col("doc_id")),
           rowsHint = Tables.layout(s, s"$d/documents.parquet").rows)
-        .select(col("doc_id"), col("shuffle_key"), col("__rank").as("pos"))
-    }),
+        .select(col("doc_id"), col("shuffle_key"), col("pos"))),
 
     // Cross-source contamination matrix: distinct word-trigram Jaccard
     // between every source pair — the recipe-level "is split A leaking
@@ -842,8 +875,7 @@ object TextAnalysis {
     // add-1-smoothed so target-only/raw-only buckets stay finite.
     "tx25_dsir_weights" -> ((s, d) => {
       val B = 4096
-      val bucket = expr(
-        "CAST(conv(substring(md5(t), 1, 8), 16, 10) AS BIGINT) % 4096")
+      val bucket = Fingerprints.bucket(col("t"), B)
       val tok = Tables.wide(s, d, "documents", "doc_id", "source", "text")
         .select(col("doc_id"), col("source"),
           explode(expr(tokensExpr)).as("t"))

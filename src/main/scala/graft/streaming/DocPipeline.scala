@@ -17,18 +17,13 @@ import org.apache.spark.sql.functions._
   */
 object DocPipeline {
 
-  /** Per-row quality gate: token count and type-token ratio thresholds
-    * (the streaming twin of tx02_quality_score's verdict column). */
+  /** Per-row quality gate: token count and type-token ratio thresholds.
+    * At the defaults it keeps exactly the docs tx02_quality_score marks
+    * `keep`: it is the same kernel,
+    * [[graft.operators.TextAnalysis.qualityKept]]. */
   def qualityFilter(docs: DataFrame, minTokens: Int = 40,
       minTtr: Double = 0.25): DataFrame =
-    docs
-      .withColumn("toks",
-        expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)"))
-      .withColumn("n_tok", expr("size(toks)"))
-      .filter(col("n_tok") >= minTokens &&
-        expr("size(array_distinct(toks))").cast("double") / col("n_tok")
-          >= minTtr)
-      .drop("toks", "n_tok")
+    graft.operators.TextAnalysis.qualityKept(docs, minTokens, minTtr)
 
   /** Exact content dedup within the watermark horizon, keyed on the md5
     * of whitespace-normalized text — only fingerprints enter the state

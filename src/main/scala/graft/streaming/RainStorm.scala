@@ -1,7 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -123,16 +124,20 @@ object RainStormJob {
     * Not `DataFrameWriter.text`: its commit protocol (job and task temp
     * directories, per-task commit renames, `_SUCCESS`) and the Hadoop
     * conf it ships with every task were most of a small batch's sink time
-    * (OPTIMIZATION_r18.md). */
+    * (OPTIMIZATION_r18.md). The driver and the tasks use the session's
+    * Hadoop conf, as the checkpoint does, so a per-session setting (say
+    * `spark.conf.set("fs.file.impl", ...)`) reaches the output too. It
+    * is read at the session's first batch (a streaming query runs all
+    * batches of one start in one session) and broadcast once for them. */
   def textSink(outDir: String)(batch: Dataset[org.apache.spark.sql.Row],
       batchId: Long): Unit = {
     // Distributed write — records never funnel through the driver the way
     // every reference record funnels through the leader (leader.py:212-246).
     val sc = batch.sparkSession.sparkContext
-    val conf = broadcastConf(sc)
+    val (hadoopConf, conf) = sinkConf(batch.sparkSession)
     val target = new Path(outDir, s"batch-$batchId")
     val staging = new Path(outDir, s"_staging-batch-$batchId")
-    val fs = target.getFileSystem(sc.hadoopConfiguration)
+    val fs = target.getFileSystem(hadoopConf)
     fs.delete(staging, true)
     if (!fs.mkdirs(staging))
       throw new java.io.IOException(s"cannot create $staging")
@@ -167,18 +172,23 @@ object RainStormJob {
       throw new java.io.IOException(s"rename $staging -> $target failed")
   }
 
-  // The sink's Hadoop conf, broadcast once per live SparkContext rather
-  // than shipped with every task.
-  private var sinkConf: (SparkContext, Broadcast[SerializableConfiguration]) =
-    null
+  // Per session, not per batch: a broadcast per batch added ≈10 ms to
+  // the `rainstorm` benchmark's per-batch sink time (p50, 4 cores).
+  // Weak keys, so an entry goes with its session.
+  private val sinkConfs = new java.util.WeakHashMap[SparkSession,
+    (Configuration, Broadcast[SerializableConfiguration])]()
 
-  private def broadcastConf(
-      sc: SparkContext): Broadcast[SerializableConfiguration] = synchronized {
-    if (sinkConf == null || (sinkConf._1 ne sc))
-      sinkConf = (sc,
-        sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)))
-    sinkConf._2
-  }
+  private def sinkConf(s: SparkSession)
+      : (Configuration, Broadcast[SerializableConfiguration]) =
+    sinkConfs.synchronized {
+      var c = sinkConfs.get(s)
+      if (c == null) {
+        val conf = s.sessionState.newHadoopConf()
+        c = (conf, s.sparkContext.broadcast(new SerializableConfiguration(conf)))
+        sinkConfs.put(s, c)
+      }
+      c
+    }
 
   /** Small-file compaction for a directory of per-batch outputs — the
     * analogue of HyDFS's multi-writer append + `merge` protocol

@@ -93,8 +93,8 @@ class CheckpointManagerSpec extends AnyFunSuite {
     assert(stock != classOf[LocalFs])
     // the shared SparkContext carries the engine's key, so the session
     // names the stock class; uncached, so the engine's cached instance
-    // is neither returned nor replaced. The sink reads the SparkContext's
-    // Hadoop conf, so only the checkpoint comes from the stock class.
+    // is neither returned nor replaced. The checkpoint and the sink both
+    // read the session's Hadoop conf, so both use the stock class.
     val plain = spark.newSession()
     plain.conf.set("fs.file.impl", stock.getName)
     plain.conf.set("fs.file.impl.disable.cache", "true")

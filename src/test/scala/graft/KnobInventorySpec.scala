@@ -14,7 +14,6 @@ class KnobInventorySpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
   private val knobs = Set(
-    "JOBPROFILE_WARMUP",
     "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_BENCH_ONLY",
     "SPARK_GRAFT_BENCH_PASSES",
@@ -30,9 +29,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_STATE_STORE",
     "SPARK_GRAFT_STREAMING",
     "SPARK_GRAFT_TABLES",
-    "graft.pairs.budget.gb",
-    "graft.sim09.eagerSlices",
-    "graft.sim09.slices")
+    "graft.pairs.budget.gb")
 
   /** Source text with comments blanked out; string literals are kept. */
   private def code(text: String): String = {

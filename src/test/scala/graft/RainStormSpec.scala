@@ -173,6 +173,30 @@ class RainStormSpec extends AnyFunSuite {
     assert(lines("_staging-batch-10") == Seq("k99:v99"))
   }
 
+  test("textSink writes through the session's Hadoop conf") {
+    // a session-level filesystem setting, uncached so the engine's cached
+    // `file:` instance is neither returned nor replaced
+    val session = spark.newSession()
+    session.conf.set("fs.file.impl", classOf[RecordingLocalFs].getName)
+    session.conf.set("fs.file.impl.disable.cache", "true")
+    RecordingLocalFs.renamed.clear()
+    val out = new java.io.File(
+      Files.createTempDirectory("rs-sink-conf").toFile, "out")
+    val rows = session.range(40)
+      .selectExpr("concat('k', id) AS key", "concat('v', id) AS value")
+      .repartition(2)
+    RainStormJob.textSink(out.getPath)(rows, 3L)
+
+    val batch = new java.io.File(out, "batch-3")
+    val parts = batch.list().toSet
+      .filter(n => n.startsWith("part-") && !n.endsWith(".crc"))
+    assert(parts.size == 2)
+    // the tasks' part-file renames and the driver's batch commit
+    import scala.jdk.CollectionConverters._
+    assert(RecordingLocalFs.renamed.asScala.toSet == parts + "batch-3")
+    assert(readOut(batch).sorted == (0 until 40).map(i => s"k$i:v$i").sorted)
+  }
+
   test("rainstorm CLI listener prints one line per committed batch") {
     val root = Files.createTempDirectory("rs-progress").toFile
     val in = new java.io.File(root, "in"); in.mkdirs()
@@ -221,4 +245,18 @@ class RainStormSpec extends AnyFunSuite {
     q.awaitTermination()
     assert(readOut(out).size == 2 * (0 until 100).count(_ % 5 != 0))
   }
+}
+
+/** The engine's `file:` filesystem, recording the name of every rename
+  * target, from the driver and the tasks alike (local mode: one JVM). */
+class RecordingLocalFs extends graft.core.LocalFs {
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean = {
+    RecordingLocalFs.renamed.add(dst.getName)
+    super.rename(src, dst)
+  }
+}
+
+object RecordingLocalFs {
+  val renamed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }

@@ -255,20 +255,17 @@ class Round12Spec extends AnyFunSuite {
     // hamming<=1 collision set (symmetric), and the rescore is
     // deterministic, so the union of per-slice top-k must equal the
     // exploded one-pass selection bit-for-bit.
-    def run(): Set[(Long, Int, Long, Double)] = {
+    def run(slices: Int): Set[(Long, Int, Long, Double)] = {
       spark.catalog.clearCache()
-      operators.Similarity.knnGraphLsh(spark, sf).collect()
+      operators.Similarity.knnGraphLsh(spark, sf, slices).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
           r.getDouble(3))).toSet
     }
-    val onePass = run()
-    sys.props("graft.sim09.slices") = "3"
-    try {
-      val sliced = run()
-      assert(sliced == onePass,
-        s"sliced != one-pass: only-sliced ${(sliced -- onePass).take(3)}, " +
-          s"only-one-pass ${(onePass -- sliced).take(3)}")
-    } finally sys.props.remove("graft.sim09.slices")
+    val onePass = run(1)
+    val sliced = run(3)
+    assert(sliced == onePass,
+      s"sliced != one-pass: only-sliced ${(sliced -- onePass).take(3)}, " +
+        s"only-one-pass ${(onePass -- sliced).take(3)}")
   }
 
   // ---- tx27 ---------------------------------------------------------

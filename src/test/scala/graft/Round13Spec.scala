@@ -13,10 +13,9 @@ private class DoublingEncoder extends graft.operators.MediaEncoder {
         e.emb.map(_ * 2)))
 }
 
-/** Round-13 additions: the pluggable media-encoder seam, the mm04 audit
-  * relation (the driver-gated form that closed the last no_oracle row),
-  * and the sim09 eager-slice lifecycle (a disk-lifecycle rewrite that
-  * must never be a semantic one). */
+/** Round-13 additions: the pluggable media-encoder seam and the mm04
+  * audit relation (the driver-gated form that closed the last no_oracle
+  * row). */
 class Round13Spec extends AnyFunSuite {
 
   lazy val spark = SparkTestSession()
@@ -68,28 +67,5 @@ class Round13Spec extends AnyFunSuite {
           s"census says ${twins(id)}")
     }
     assert(twins.nonEmpty, "fixture lost its planted duplicate clusters")
-  }
-
-  test("sim09: the eager slice lifecycle emits EXACTLY the lazy one-job " +
-      "rows (r13 is a disk-lifecycle rewrite, never a semantic one)") {
-    def run(): Set[(Long, Int, Long, Double)] = {
-      spark.catalog.clearCache()
-      operators.Similarity.knnGraphLsh(spark, sf).collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
-          r.getDouble(3))).toSet
-    }
-    sys.props("graft.sim09.slices") = "3"
-    try {
-      sys.props("graft.sim09.eagerSlices") = "false"
-      val lazyRows = run()
-      sys.props("graft.sim09.eagerSlices") = "true"
-      val eagerRows = run()
-      assert(eagerRows == lazyRows,
-        s"eager != lazy: only-eager ${(eagerRows -- lazyRows).take(3)}, " +
-          s"only-lazy ${(lazyRows -- eagerRows).take(3)}")
-    } finally {
-      sys.props.remove("graft.sim09.slices")
-      sys.props.remove("graft.sim09.eagerSlices")
-    }
   }
 }
