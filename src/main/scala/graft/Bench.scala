@@ -5,17 +5,19 @@ import org.apache.spark.sql.SparkSession
 /** Benchmark main. Prints ONE compact JSON line for the driver plus a full
   * per-query detail file (`bench_full.json`).
   *
-  * The headline line is deliberately small (<~1 kB): the driver captures only
-  * a bounded tail of stdout, and a line carrying every query at full double
-  * precision overflows it (round 1's line was ~2.2 kB and failed to parse).
-  * The complete per-query map lives in bench_full.json and on an earlier
+  * The headline line is deliberately small (<= 1 kB for a full run,
+  * BenchHeadlineSpec): a harness that keeps only a bounded tail of
+  * stdout must get it whole, and a line carrying every query at full
+  * double precision overflows that tail (round 1's line was ~2.2 kB and
+  * failed to parse). The complete per-query map, the index build split
+  * and the fixture stamp live in bench_full.json and on an earlier
   * stdout line.
   */
 object Bench {
 
   /** Representative queries inlined into the headline JSON (one or two per
     * operator family); the full map is in bench_full.json. */
-  private val Headline = Seq(
+  private[graft] val Headline = Seq(
     "q01_pricing_summary", "q03_topk_orders", "q05_broadcast_join",
     "q13_cube", "q19_scalar_subquery", "q23_percentiles",
     "dd01_exact_dedup", "dd03_minhash_lsh", "dd06_dedup_clusters",
@@ -28,20 +30,73 @@ object Bench {
     * plain min-of-2 would silently swallow (dd09's sf2 passes were
     * [41.3 s, 0.53 s] and the headline said 0.53) — so the bench wipes
     * the sfDir's index store up front (pass 1 = deterministic
-    * build+query, pass 2 = steady state) and reports both: the headline
-    * `queries` map carries the steady number, `index_build` carries
-    * {first_pass_s, steady_s, build_s}. Within a pass the FIRST query
-    * to touch an artifact builds it (alphabetical order: dd09 builds the
-    * pair table that dd10/dd14 reuse; sim03_ivf_knn the IVF index that
-    * sim03_probe reuses; sim05_pq_knn the PQ codebook+codes that
-    * sim05_probe reuses). */
+    * build+query, pass 2 = steady state) and reports both: the
+    * `queries` maps carry the steady number, bench_full.json's
+    * `index_build` carries {first_pass_s, steady_s, build_s}. Within a
+    * pass the FIRST query to touch an artifact builds it (alphabetical
+    * order: dd09 builds the pair table that dd10/dd14 reuse;
+    * sim03_ivf_knn the IVF index that sim03_probe reuses; sim05_pq_knn
+    * the PQ codebook+codes that sim05_probe reuses). */
   private val IndexBacked = Seq(
     "dd09_clusters_from_pairs", "dd10_dedup_corpus_from_pairs",
     "dd14_cluster_canonical", "dd17_incremental_probe",
     "sim03_ivf_knn", "sim03_probe", "sim05_pq_knn", "sim05_probe",
     "gx01_pagerank", "gx02_triangles")
 
+  /** dd05 gate: the exact O(N^2) all-pairs baseline exists as dd07's
+    * recall anchor at spec'd scales (<= sf1), not as a scale path — at
+    * sf2 it was 13% of the whole bench total and growing ~N^2 (91.7 s,
+    * 3.1x for 2x), drowning the scale-path trend the sidecars exist to
+    * show. Above the sf1 corpus size (GateVectors embeddings) it is
+    * excluded from the timed passes and the JSON says so; its anchor
+    * role (bit-exact vs the numpy checker at sf1) is unchanged. sim08 is
+    * the kNN-graph twin of dd05's role: the exact O(N^2) anchor the
+    * scale path (sim09) is recall-checked against — same gate, same
+    * rationale. */
+  private val ExactPairAnchors = Set("dd05_embedding_neardup", "sim08_knn_graph")
+  private val GateVectors = 60000L
+
+  /** Program argument that makes this main the streaming child JVM. */
+  private val StreamingChild = "--streaming-child"
+
   private def jnum(v: Double): String = f"$v%.3f"
+
+  private def jmap(kv: Seq[(String, Double)]): String =
+    kv.map { case (k, v) => s"\"$k\":${jnum(v)}" }.mkString("{", ",", "}")
+
+  /** The fields both JSON lines open with: total, protocol, failures. */
+  private def totalsJson(results: Seq[(String, Double)]): String =
+    s"""{"metric":"total","value":${jnum(results.map(_._2).filter(_ >= 0).sum)},"unit":"sec","protocol":"min2","failures":${results.count(_._2 < 0)},"n_queries":${results.size}"""
+
+  /** The streaming rates, their protocol and the dropped-rows field. An
+    * empty rates map marks "streaming section did not run" (e.g. missing
+    * fixture checkout) as distinct from "removed". */
+  private[graft] def streamingJson(streaming: Seq[(String, Double)],
+      dropped: String): String =
+    ""","streaming_rec_s":""" + jmap(streaming) +
+      (if (streaming.nonEmpty)
+        ""","streaming_protocol":"child-jvm;median-of-3;host-swing see BENCH_streaming_ab.json""""
+       else "") + dropped
+
+  /** The dd05 gate stamp ("" below [[GateVectors]] embeddings) and the
+    * campaign skip stamp ("" when nothing is skipped). */
+  private[graft] def gateStamps(nVec: Long, skipSet: Set[String],
+      skipReason: String): String =
+    (if (nVec > GateVectors)
+      s""","dd05_gated":"excluded ${ExactPairAnchors.toSeq.sorted.mkString("+")}: O(N^2) recall anchors, corpus ${nVec} vectors > 60k sf1 bound (PLANS.md)""""
+      else "") +
+    (if (skipSet.nonEmpty)
+      s""","skipped":"${skipSet.toSeq.sorted.mkString("+")}: ${jesc(skipReason)}""""
+     else "")
+
+  /** The headline line: the totals, the [[Headline]] queries, the
+    * streaming section and the gate/skip stamps, plus a pointer to
+    * bench_full.json, which carries everything else. */
+  private[graft] def headline(results: Seq[(String, Double)],
+      streamJson: String, stamps: String, sfDir: String): String =
+    totalsJson(results) + ""","queries":""" +
+      jmap(results.filter(r => Headline.contains(r._1))) +
+      s"""$streamJson$stamps,"detail":"bench_full.json","sf":"$sfDir"}"""
 
   /** JSON string escape for free-text fields interpolated into the
     * sidecars (r14 advisor: a quote/backslash in SPARK_GRAFT_BENCH_SKIP's
@@ -66,8 +121,8 @@ object Bench {
   }
 
   /** Run the streaming section in a fresh child JVM (same classpath and
-    * JVM flags as this one, SPARK_GRAFT_STREAMING=only) and read its
-    * bench_streaming.json: the rates and the dropped-rows field. Launched
+    * JVM flags as this one, program argument [[StreamingChild]]) and read
+    * its bench_streaming.json: the rates and the dropped-rows field. Launched
     * AFTER the batch passes, so the child's JVM holds nothing but the
     * streaming micro-bench — the sidecars' quiet protocol, driven by the
     * bench itself. Returns no rates (distinct from a measured zero) if
@@ -81,9 +136,9 @@ object Bench {
       val jvmArgs = java.lang.management.ManagementFactory
         .getRuntimeMXBean.getInputArguments.asScala.toSeq
       val cmd = (Seq(jvm) ++ jvmArgs ++ Seq("-cp",
-        System.getProperty("java.class.path"), "graft.Bench")).asJava
+        System.getProperty("java.class.path"), "graft.Bench",
+        StreamingChild)).asJava
       val pb = new ProcessBuilder(cmd)
-      pb.environment().put("SPARK_GRAFT_STREAMING", "only")
       pb.redirectErrorStream(true)
       pb.redirectOutput(new java.io.File("bench_streaming_child.log"))
       val p = pb.start()
@@ -160,23 +215,21 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // Streaming section mode: "child" (default — batch in this process,
-    // then the streaming micro-bench in a FRESH child JVM, sequentially),
-    // "inline" (legacy r<=10 protocol, same process), "skip", or "only".
-    // The streaming rows are scale-INVARIANT (fixed 10k-row fixtures),
-    // so any in-process measurement inherits the batch surface's heap
-    // debris and GC debt — r10's driver bench read streaming ~2x below
-    // the quiet sidecar protocol for exactly this reason (and r7's sf2
-    // rows depressed ~2.6x under a concurrent batch gate). The child
-    // runs AFTER the batch passes complete, in a JVM whose only work is
-    // the streaming section — the quiet protocol, driven BY the bench.
-    val streamMode = sys.env.getOrElse("SPARK_GRAFT_STREAMING", "child")
-
-    if (streamMode == "only") {
+    // Streaming section: SPARK_GRAFT_STREAMING=child (default) runs the
+    // batch passes in this process, then the streaming micro-bench in a
+    // FRESH child JVM; "skip" leaves it out. The streaming rows are
+    // scale-INVARIANT (fixed 10k-row fixtures), so an in-process
+    // measurement inherits the batch surface's heap debris and GC debt —
+    // r10's in-process full bench read streaming ~2x below the quiet
+    // sidecar protocol for exactly this reason (and r7's sf2 rows
+    // depressed ~2.6x under a concurrent batch gate). The child runs
+    // AFTER the batch passes complete, in a JVM whose only work is the
+    // streaming section — the quiet protocol, driven BY the bench.
+    if (args.contains(StreamingChild)) {
       val (streaming, dropped) = streamingMedianOf3(spark)
-      val streamJson = streaming.map { case (k, v) => s"\"$k\":${jnum(v)}" }
-        .mkString("""{"metric":"streaming","streaming_rec_s":{""", ",",
-          s"""},"streaming_protocol":"child-jvm;median-of-3;host-swing see BENCH_streaming_ab.json"$dropped,${windowJson(runStartMs)},"sf":"$sfDir"}""")
+      val streamJson = """{"metric":"streaming"""" +
+        streamingJson(streaming, dropped) +
+        s""",${windowJson(runStartMs)},"sf":"$sfDir"}"""
       java.nio.file.Files.write(
         java.nio.file.Paths.get("bench_streaming.json"),
         (streamJson + "\n").getBytes("UTF-8"))
@@ -184,21 +237,18 @@ object Bench {
       spark.stop()
       return
     }
+    val skipStreaming =
+      sys.env.getOrElse("SPARK_GRAFT_STREAMING", "child") match {
+        case "child" => false
+        case "skip"  => true
+        case other   => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_STREAMING=$other: expected child or skip")
+      }
 
-    // dd05 gate: the exact O(N^2) all-pairs baseline exists as dd07's
-    // recall anchor at spec'd scales (<= sf1), not as a scale path — at
-    // sf2 it was 13% of the whole bench total and growing ~N^2 (91.7 s,
-    // 3.1x for 2x), drowning the scale-path trend the sidecars exist to
-    // show. Above the sf1 corpus size it is excluded from the timed
-    // passes and the JSON says so; its anchor role (bit-exact vs the
-    // numpy checker at sf1) is unchanged.
+    // dd05 gate (see ExactPairAnchors)
     val nVec = try graft.core.Tables(spark, sfDir, "embeddings").count()
       catch { case _: Throwable => 0L }
-    val gateDd05 = nVec > 60000
-    // sim08 is the kNN-graph twin of dd05's role: the exact O(N^2)
-    // anchor the scale path (sim09) is recall-checked against — same
-    // gate, same rationale
-    val ExactPairAnchors = Set("dd05_embedding_neardup", "sim08_knn_graph")
+    val gateDd05 = nVec > GateVectors
     // Optional subset run (comma-separated names): the targeted-sidecar
     // dev loop — e.g. the sf4 pair-kernel trend point only times the five
     // pair kernels instead of paying for the full query surface.
@@ -319,41 +369,17 @@ object Bench {
     // carries a protocol tag) so consumers can tell min-of-2 results from
     // the single-pass protocol of rounds <= 5 — the metric definitions
     // differ and cross-round comparisons must not conflate them.
-    // SPARK_GRAFT_BENCH_PASSES=1: single timed pass (A/B-indicator
-    // protocol — compare pass1-vs-pass1 across arms; the official
-    // sidecars stay min2). Any other value = the min2 default.
-    val singlePass = sys.env.get("SPARK_GRAFT_BENCH_PASSES").contains("1")
-    val (pass1, compiles1) = countingCompiles(timedPass(record = singlePass))
-    val (pass2, compiles2) =
-      if (singlePass) (pass1, -1L) else countingCompiles(timedPass(record = true))
+    val (pass1, compiles1) = countingCompiles(timedPass())
+    val (pass2, compiles2) = countingCompiles(timedPass(record = true))
     val results = pass1.zip(pass2).map { case ((name, a), (_, b)) =>
       name -> (if (a < 0) b else if (b < 0) a else math.min(a, b))
     }
 
     // Streaming throughput in BASELINE.md's own units (output rec/s on the
     // reference's two canonical 10k-row apps; reference: ~84 rec/s simple).
-    val (streaming, dropped) = streamMode match {
-      case "skip"   => (Seq.empty, "")
-      case "inline" => streamingMedianOf3(spark)
-      case _        => streamingInChild()
-    }
-
-    val failures = results.count(_._2 < 0)
-    val total = results.map(_._2).filter(_ >= 0).sum
-    val fullQs = results.map { case (k, v) => s"\"$k\":${jnum(v)}" }
-      .mkString("{", ",", "}")
-    // Always emit the key — an empty {} marks "streaming section did not
-    // run" (e.g. missing fixture checkout) as distinct from "removed".
-    // protocol head tracks the MODE actually used (r14 advisor: the
-    // stamp hardcoded "child-jvm" even under SPARK_GRAFT_STREAMING=inline,
-    // where the section runs in the loaded batch JVM)
-    val streamProtoHead =
-      if (streamMode == "inline") "inline-jvm" else "child-jvm"
-    val streamJson = streaming.map { case (k, v) => s"\"$k\":${jnum(v)}" }
-      .mkString(""","streaming_rec_s":{""", ",", "}") +
-      (if (streaming.nonEmpty)
-        s""","streaming_protocol":"$streamProtoHead;median-of-3;host-swing see BENCH_streaming_ab.json""""
-       else "") + dropped
+    val (streaming, dropped) =
+      if (skipStreaming) (Seq.empty, "") else streamingInChild()
+    val streamJson = streamingJson(streaming, dropped)
     // Per-pass totals and code-generator compiles (its cache misses).
     // With the class cache sized to the working set (EngineConf) a timed
     // pass compiles only sources no earlier pass generated (tens at
@@ -384,38 +410,19 @@ object Bench {
         s""""${f.getName.stripPrefix("degrade_").stripSuffix(".json")}":$obj"""
       }.mkString(""","degraded":{""", ",", "}")
     }
-    val gateJson = degradeJson + (if (gateDd05)
-      s""","dd05_gated":"excluded ${ExactPairAnchors.toSeq.sorted.mkString("+")}: O(N^2) recall anchors, corpus ${nVec} vectors > 60k sf1 bound (PLANS.md)""""
-      else "") +
-      (if (skipSet.nonEmpty)
-        s""","skipped":"${skipSet.toSeq.sorted.mkString("+")}: ${jesc(skipReason)}""""
-       else "")
+    val stamps = gateStamps(nVec, skipSet, skipReason)
     val fixJson = try fixtureJson(spark, sfDir)
       catch { case e: Exception => s""""fixture":{"error":"${e.getClass.getSimpleName}"}""" }
     val wmJson = watermarks.map { case (k, (gc, st, hp)) =>
       s""""$k":[$gc,$st,$hp]""" }.mkString(
       """"watermarks_pass2":{""", ",",
       """},"watermarks_layout":"[gc_ms,storage_bytes_after,heap_bytes_after]"""")
-    val proto = if (singlePass) "single-pass" else "min2"
-    val winJson = windowJson(runStartMs)
     val fullJson =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"$proto","failures":$failures,"n_queries":${results.size},"queries":$fullQs,"passes":$passesJson$passTotalsJson$indexJson$streamJson$gateJson,$fixJson,$wmJson,$winJson,"sf":"$sfDir"}"""
+      s"""${totalsJson(results)},"queries":${jmap(results)},"passes":$passesJson$passTotalsJson$indexJson$streamJson$degradeJson$stamps,$fixJson,$wmJson,${windowJson(runStartMs)},"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
       (fullJson + "\n").getBytes("UTF-8"))
     println(s"BENCH_DETAIL $fullJson")
-
-    val headQs = results.filter(r => Headline.contains(r._1))
-      .map { case (k, v) => s"\"$k\":${jnum(v)}" }.mkString("{", ",", "}")
-    // compact build/steady split for the headline (full detail incl.
-    // first_pass_s is in bench_full.json); short keys keep the line
-    // within the driver's bounded stdout tail
-    val headIdx = pass1.zip(pass2)
-      .filter { case ((k, _), _) => IndexBacked.contains(k) }
-      .map { case ((k, a), (_, b)) =>
-        val build = if (a >= 0 && b >= 0) math.max(0.0, a - b) else -1.0
-        s""""$k":{"build_s":${jnum(build)},"steady_s":${jnum(b)}}"""
-      }.mkString(""","index_build":{""", ",", "}")
-    println(s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"$proto","failures":$failures,"n_queries":${results.size},"queries":$headQs$headIdx$streamJson$gateJson,$fixJson,$winJson,"detail":"bench_full.json","sf":"$sfDir"}""")
+    println(headline(results, streamJson, stamps, sfDir))
     spark.stop()
   }
 
@@ -483,13 +490,21 @@ object Bench {
     *
     * Each row is measured on its own: a row whose input file is absent
     * (the reference fixture) comes back as Left(why) and the other rows
-    * still run.
+    * still run. Inputs, outputs and checkpoints live under one temp
+    * directory, deleted when the rows are measured.
     */
   private def streamingRates(
       spark: SparkSession): Seq[(String, Either[String, Double])] = {
+    val root = java.nio.file.Files.createTempDirectory("bench-stream").toFile
+    try streamingRows(spark, root)
+    finally org.apache.spark.network.util.JavaUtils.deleteRecursively(root)
+  }
+
+  /** [[streamingRates]]' four rows, measured under `root`. */
+  private def streamingRows(spark: SparkSession, root: java.io.File)
+      : Seq[(String, Either[String, Double])] = {
     import graft.streaming.{RainStormApps, RainStormJob, RainStormOp}
     import java.nio.file.Files
-    val root = Files.createTempDirectory("bench-stream").toFile
 
     def countOut(out: java.io.File): Long = {
       def all(f: java.io.File): Seq[java.io.File] =

@@ -57,6 +57,9 @@ object ScaleData {
     spark.stop()
   }
 
+  /** Parquet row-group size of every generated table (see [[generate]]). */
+  private val RowGroupBytes = 2 * 1024 * 1024
+
   def generate(spark: SparkSession, sf: Double, out: String,
       openVocab: Boolean = false, anisoEmb: Boolean = false,
       nullKeys: Boolean = false): Unit = {
@@ -72,11 +75,8 @@ object ScaleData {
     // small scan (rs03 0.28 -> 0.66 s, q17 0.53 -> 1.09 s) stays near
     // the single-group floor. Set on the session's hadoop conf — the
     // value ParquetOutputFormat actually reads at write time.
-    // SPARK_GRAFT_BLOCK overrides for layout A/B experiments (e.g.
-    // 134217728 reproduces the pre-r10 single-row-group layout).
     spark.sparkContext.hadoopConfiguration
-      .setInt("parquet.block.size", sys.env.get("SPARK_GRAFT_BLOCK")
-        .map(_.toInt).getOrElse(2 * 1024 * 1024))
+      .setInt("parquet.block.size", RowGroupBytes)
     val nCust = (sf * 150000).toLong
     val nSupp = (sf * 10000).toLong
     val nPart = (sf * 200000).toLong

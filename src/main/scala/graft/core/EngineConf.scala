@@ -3,11 +3,10 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** How an engine session is configured. Every session the engine builds
-  * (Bench, Verify, PlanDump, the `graft.cli.Main` verbs,
-  * StreamScaleBench and the test session) comes from [[builder]]; the
-  * benchmark harness applies [[apply]] to its own builder. Site-only
-  * settings (Bench's `periodicGC` interval, StreamScaleBench's state
-  * store) are set on the returned builder at their site.
+  * (Bench, Verify, PlanDump, the `graft.cli.Main` verbs and the test
+  * session) comes from [[builder]]; the benchmark harness applies
+  * [[apply]] to its own builder. A site-only setting (Bench's
+  * `periodicGC` interval) is set on the returned builder at its site.
   *
   * `spark.sql.codegen.cache.maxEntries` sizes Spark's cache of compiled
   * generated classes, an LRU keyed by context classloader plus source

@@ -30,11 +30,9 @@ import org.apache.spark.sql.functions._
   */
 object PairBudget {
 
-  /** Active pair-volume budget in GB: `-Dgraft.pairs.budget.gb` (takes
-    * precedence — the per-JVM A/B knob) or `SPARK_GRAFT_PAIR_BUDGET_GB`. */
+  /** Active pair-volume budget in GB: `-Dgraft.pairs.budget.gb`. */
   def budgetGb: Option[Double] =
     sys.props.get("graft.pairs.budget.gb")
-      .orElse(sys.env.get("SPARK_GRAFT_PAIR_BUDGET_GB"))
       .flatMap(s => scala.util.Try(s.trim.toDouble).toOption)
       .filter(_ > 0)
 

@@ -1404,11 +1404,8 @@ object Dedup {
       val grams = seedGrams(
         Tables.wideMin(s, d, "documents", 1000, "doc_id", "text")
           .select(col("doc_id"), split(col("text"), " ").as("w")))
-      val dup = grams.select(col("gram"), col("doc_id")).distinct()
-        .groupBy(col("gram")).agg(count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2)
-      val hits = grams
-        .join(dup.hint("shuffle_hash"), Seq("gram"), "left_semi")
+      val hits = grams.join(seedCensus(grams).hint("shuffle_hash"),
+        Seq("gram"), "left_semi")
       val byDoc = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("p").asc)
       hits
@@ -1473,19 +1470,21 @@ object Dedup {
       .toDF("doc_id", "p", "gram")
   }
 
-  /** dd19's cut: `words` with `iv`, the merged word intervals [a, b]
-    * covered by its non-canonical seeds (a seed gram held by >= 2 docs,
-    * in any doc but the least doc_id holding it), empty for an uncut
-    * doc. `grams` is [[seedGrams]] of `words`; the caller decides
-    * whether it is persisted, because it feeds two consumers. */
-  private[graft] def spanCut(words: DataFrame, grams: DataFrame): DataFrame = {
-    val L = SpanSeedLen
-    val st = grams.select(col("gram"), col("doc_id")).distinct()
-      .groupBy(col("gram"))
+  /** dd18/dd19's census of [[seedGrams]] rows: (gram, md, nd) per gram
+    * held by nd >= 2 distinct docs, md the least of them. */
+  private[graft] def seedCensus(grams: DataFrame): DataFrame =
+    grams.select(col("gram"), col("doc_id")).distinct().groupBy(col("gram"))
       .agg(min(col("doc_id")).as("md"), count(lit(1)).as("nd"))
       .filter(col("nd") >= 2)
+
+  /** dd19's cut: `words` with `iv`, the merged word intervals [a, b] of
+    * its non-canonical seeds ([[seedCensus]] grams outside their md doc),
+    * empty for an uncut doc. `grams` is [[seedGrams]] of `words`; the
+    * caller decides whether to persist it (it feeds two consumers). */
+  private[graft] def spanCut(words: DataFrame, grams: DataFrame): DataFrame = {
+    val L = SpanSeedLen
     val noncanon = grams
-      .join(st.hint("shuffle_hash"), Seq("gram"))
+      .join(seedCensus(grams).hint("shuffle_hash"), Seq("gram"))
       .filter(col("doc_id") =!= col("md"))
       .select(col("doc_id"), col("p"))
     val byDoc = org.apache.spark.sql.expressions.Window

@@ -76,8 +76,8 @@ class DocPipelineSpec extends AnyFunSuite {
 
   test("state-store provider is a pure deployment knob: RocksDB run " +
       "emits the identical pair set") {
-    // The StreamScaleBench A/B showed identical output at 100k docs;
-    // this pins provider-independence in CI at spec scale. The provider
+    // The round-12 state-store A/B (PLANS.md) showed identical output at
+    // 100k docs; this pins provider-independence at spec scale. The provider
     // is read from SQLConf per query start, so a session-level set
     // scoped to this test is enough.
     implicit val sqlCtx = spark.sqlContext
@@ -112,6 +112,70 @@ class DocPipelineSpec extends AnyFunSuite {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("ingest over a parquet file source, stopped after its first batch " +
+      "and restarted from its checkpoint, emits the batch expectation " +
+      "exactly once") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.streaming.Trigger
+    import graft.core.Fingerprints
+    val root = java.nio.file.Files.createTempDirectory("ingest-restart")
+      .toFile
+    val in = new java.io.File(root, "in")
+    val out = new java.io.File(root, "out").getPath
+    val ckpt = new java.io.File(root, "ckpt").getPath
+    // 30 docs per chunk, one per second: 45 words from a 300-word
+    // vocabulary (they pass the default gate), every 10th doc too short
+    // to pass, and every 7th plus each chunk's second an exact copy (up
+    // to whitespace) of the doc 5 ids earlier, so copies cross every
+    // chunk boundary, the restart's included
+    val words = (0 until 300).map(i => s"w$i")
+    def text(id: Long): String =
+      if (id >= 5 && (id % 7 == 3 || id % 30 == 1)) text(id - 5) + "  "
+      else if (id % 10 == 9) "too short"
+      else (0 until 45).map(j =>
+        words(((id * 7919 + j * 104729 + j * j) % 300).toInt)).mkString(" ")
+    def writeChunk(k: Int): Unit = graft.core.ParquetFiles.writeSingle(
+      (k * 30L until (k + 1) * 30L)
+        .map(id => (id, new Timestamp(1704067200000L + id * 1000), text(id)))
+        .toDF("doc_id", "ts", "text"),
+      new java.io.File(in, s"chunk-$k.parquet"))
+    def start() = DocPipeline.ingest(
+      spark.readStream.schema("doc_id LONG, ts TIMESTAMP, text STRING")
+        .option("maxFilesPerTrigger", 1).parquet(in.getPath))
+      .writeStream.format("parquet")
+      .option("path", out).option("checkpointLocation", ckpt)
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try {
+      Seq(0, 1).foreach(writeChunk)
+      // run 1: stopped as soon as its first batch is committed (the
+      // second may be in flight: its uncommitted output must stay
+      // invisible and the batch replay on restart)
+      val q1 = start()
+      while (!q1.recentProgress.exists(_.numInputRows > 0)) {
+        if (!q1.isActive) q1.awaitTermination()
+        Thread.sleep(10)
+      }
+      q1.stop()
+      assert(spark.read.parquet(out).count() > 0)
+      // run 2: restarted from the checkpoint with two more chunks
+      Seq(2, 3).foreach(writeChunk)
+      val q2 = start()
+      q2.processAllAvailable()
+      q2.stop()
+
+      val fps = (df: org.apache.spark.sql.DataFrame) =>
+        df.select(Fingerprints.content(col("text")).cast("string"))
+          .as[String].collect().toSeq
+      val want = fps(DocPipeline.qualityFilter(
+        spark.read.parquet(in.getPath))).distinct.sorted
+      val got = spark.read.parquet(out)
+      assert(fps(got).sorted == want)
+      assert(got.select("doc_id").distinct().count() == want.size,
+        "a doc_id was emitted twice")
+      assert(want.size < 120 - 12, "the fixture plants no duplicates")
+    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(root)
   }
 
   test("scoreQuality: streamed classifier scores are row-identical to " +

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Inventory of the engine's settings, read from the main sources as
   * text (no Spark). Every session comes from `EngineConf.builder`, and
   * the environment variables and system properties the engine reads are
-  * exactly the ones listed here (README "Settings"). A new knob, or a
-  * second hand-built session, has to change this list on purpose. */
+  * exactly the ones listed here (README "Settings"). A new knob, a
+  * second hand-built session or a new `main` has to change a list here
+  * on purpose. */
 class KnobInventorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -16,17 +17,13 @@ class KnobInventorySpec extends AnyFunSuite {
   private val knobs = Set(
     "SPARK_DRIVER_MEM",
     "SPARK_GRAFT_BENCH_ONLY",
-    "SPARK_GRAFT_BENCH_PASSES",
     "SPARK_GRAFT_BENCH_SKIP",
-    "SPARK_GRAFT_BLOCK",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_FIXTURES",
     "SPARK_GRAFT_INDEX_DIR",
     "SPARK_GRAFT_JARS",
     "SPARK_GRAFT_MASTER",
-    "SPARK_GRAFT_PAIR_BUDGET_GB",
     "SPARK_GRAFT_SF_DIR",
-    "SPARK_GRAFT_STATE_STORE",
     "SPARK_GRAFT_STREAMING",
     "SPARK_GRAFT_TABLES",
     "graft.pairs.budget.gb")
@@ -79,6 +76,18 @@ class KnobInventorySpec extends AnyFunSuite {
       _ <- builder.findAllMatchIn(src)
     } yield root.relativize(p).toString
     assert(sites == Seq("graft/core/EngineConf.scala"))
+  }
+
+  test("the main entry points are Bench, Verify, PlanDump, ScaleData " +
+      "and cli.Main") {
+    val main = """\bdef\s+main\s*\(""".r
+    val app = """\bextends\s+App\b""".r
+    val sites = for {
+      (p, src) <- sources
+      _ <- main.findAllMatchIn(src) ++ app.findAllMatchIn(src)
+    } yield root.relativize(p).toString
+    assert(sites == Seq("graft/Bench.scala", "graft/PlanDump.scala",
+      "graft/ScaleData.scala", "graft/Verify.scala", "graft/cli/Main.scala"))
   }
 
   test("the env vars and system properties read are the listed knobs") {

@@ -40,6 +40,52 @@ class PipelineSpec extends AnyFunSuite {
     assert(byName("pack")._4 > 0, "empty packed corpus")
   }
 
+  test("pp01: stage 3 cuts planted spans exactly as dd19 does") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, md5}
+    // 40 docs of 45 words from a 300-word vocabulary (each passes the
+    // quality gate; no two are near-duplicates), with two planted spans
+    // of at least SpanSeedLen words: SpanSeedLen + 5 words in docs 3, 11
+    // and 25, SpanSeedLen + 1 in docs 7 and 30. Every doc reaches stage
+    // 3, so dd19 over the same table sees the same docs.
+    val L = operators.Dedup.SpanSeedLen
+    val spanA = (0 until L + 5).map(i => s"a$i")
+    val spanB = (0 until L + 1).map(i => s"b$i")
+    val planted = Map(3 -> spanA, 11 -> spanA, 25 -> spanA,
+      7 -> spanB, 30 -> spanB)
+    def text(id: Int): String = {
+      val w = (0 until 45).map(j => s"w${(id * 119 + j * 29 + j * j) % 300}")
+      (w.take(10) ++ planted.getOrElse(id, Nil) ++ w.drop(10)).mkString(" ")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("pp01-spans").toFile
+    graft.core.ParquetFiles.writeSingle((0 until 40)
+        .map(id => (id.toLong, text(id), Seq("en", "fr")(id % 2), s"src${id % 4}"))
+        .toDF("doc_id", "text", "lang", "source"),
+      new java.io.File(dir, "documents.parquet"))
+    try {
+      val (lineage, frames) =
+        operators.Pipeline.run(spark, dir.getPath, keepFrames = true)
+      val byName = lineage.map(l => l._2 -> l).toMap
+      assert(byName("dedup")._4 == 40, "a fixture doc left before stage 3")
+      assert(byName("span_dedup")._5 != byName("dedup")._5,
+        "stage 3 cut nothing")
+      val staged = frames.toMap.apply("span_dedup")
+        .select(col("doc_id"), md5(col("text")))
+        .as[(Long, String)].collect().toMap
+      val dd19 = SparkEntry.queries("dd19_substring_dedup_corpus")(
+          spark, dir.getPath)
+        .select("doc_id", "clean_fp", "n_cut")
+        .as[(Long, String, Long)].collect()
+      assert(staged == dd19.map(r => r._1 -> r._2).toMap)
+      // the non-canonical copies are cut, and only they: 11, 25 and 30
+      assert(dd19.filter(_._3 > 0).map(r => r._1 -> r._3).toMap ==
+        Map(11L -> (L + 5L), 25L -> (L + 5L), 30L -> (L + 1L)))
+    } finally {
+      spark.catalog.clearCache()
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(dir)
+    }
+  }
+
   test("pp01: READ-ONCE + BOUNDED PLANS — the whole nine-stage run " +
       "reads the documents parquet once (byte-counted), every stage is " +
       "plan-severed, and no fresh action re-scans parquet") {
