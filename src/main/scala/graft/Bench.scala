@@ -506,16 +506,6 @@ object Bench {
     import graft.streaming.{RainStormApps, RainStormJob, RainStormOp}
     import java.nio.file.Files
 
-    def countOut(out: java.io.File): Long = {
-      def all(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles).toSeq.flatten.flatMap(all) else Seq(f)
-      all(out).filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-        .map { f =>
-          val s = scala.io.Source.fromFile(f)
-          try s.getLines().size.toLong finally s.close()
-        }.sum
-    }
-
     def run(name: String, write: java.io.File => Unit,
         ops: Seq[RainStormOp], stateful: Boolean): Either[String, Double] = {
       val in = new java.io.File(root, s"in-$name"); in.mkdirs()
@@ -527,7 +517,9 @@ object Bench {
       RainStormJob.start(spark, in.getPath, ops, out.getPath,
         new java.io.File(root, s"ckpt-$name").getPath, stateful)
         .awaitTermination()
-      Right(countOut(out) / ((System.nanoTime() - t0) / 1e9))
+      val secs = (System.nanoTime() - t0) / 1e9
+      Right(spark.read.text(RainStormJob.committed(spark, out.getPath)
+        .map(_.toString): _*).count() / secs)
     }
 
     // Warm the streaming machinery (class loading, codegen) off the clock.

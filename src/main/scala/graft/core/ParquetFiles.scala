@@ -20,7 +20,7 @@ object ParquetFiles {
     parent.mkdirs()
     val tmp = new java.io.File(parent, s".tmp_${target.getName}")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.getPath)
-    val part = tmp.listFiles().find(f => f.getName.startsWith("part-") &&
+    val part = tmp.listFiles().find(f => !f.getName.startsWith(".") &&
       f.getName.endsWith(".parquet")).getOrElse(sys.error(
       s"no part file under $tmp — parquet writer layout changed?"))
     if (target.exists()) target.delete()

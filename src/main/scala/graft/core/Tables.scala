@@ -318,9 +318,6 @@ object Num {
   /** Exact sum for derived 4-dp products such as price*(1-discount). */
   def dsum4(c: Column): Column = scaledSum(c, 4)
 
-  /** Order-independent mean: exact scaled sum divided as doubles. */
-  def davg(c: Column): Column = (dsum(c) / count(c)).as("avg")
-
   /** SQL fragment equivalents for the DuckDB oracle. DuckDB FLOOR returns
     * DOUBLE and CAST(double AS BIGINT) *rounds*, but the floored value is
     * already integral so the cast is exact; SUM(BIGINT) is a HUGEINT. */
@@ -330,5 +327,4 @@ object Num {
   }
   def sqlDsum(expr: String): String = sqlScaledSum(expr, 2)
   def sqlDsum4(expr: String): String = sqlScaledSum(expr, 4)
-  def sqlDavg(expr: String): String = s"${sqlScaledSum(expr, 2)} / COUNT($expr)"
 }

@@ -1,7 +1,9 @@
 package graft.streaming
 
+import java.io.IOException
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -105,71 +107,78 @@ object RainStormJob {
     ops.foldLeft(source)(applyOp)
 
   /** Exactly-once text sink, the analogue of the leader's batched
-    * `key:value` flush (src/Streaming/leader.py:248-284): one atomically
-    * renamed directory `batch-<batchId>` per micro-batch, holding one
-    * `part-<partition>` text file (with its `.crc` sidecar) per non-empty
-    * partition of the batch. An empty batch yields an empty directory.
+    * `key:value` flush (src/Streaming/leader.py:248-284): one directory
+    * `batch-<batchId>` per micro-batch, holding one `part-<partition>`
+    * text file (with its `.crc` sidecar) per non-empty partition; an empty
+    * batch yields an empty directory. One Spark job ([[writeParts]])
+    * writes `_staging-batch-<batchId>` and [[commit]] renames it into
+    * place, so records never funnel through the driver (as every reference
+    * record funnels through the leader, leader.py:212-246), a batch is
+    * visible whole or not at all, and a replay after failure replaces it
+    * instead of duplicating it, even with another partition count
+    * (idempotence replaces the leader-side dedup, leader.py:241-246).
     *
-    * The write is one Spark job. Each task writes its partition through
-    * the Hadoop FileSystem API to a per-attempt temp file and renames it
-    * into the hidden `_staging-batch-<batchId>` directory; the driver then
-    * deletes any `batch-<batchId>` an earlier attempt left and renames the
-    * staging directory into place. So a batch becomes visible whole or not
-    * at all, and a replay after failure replaces the batch instead of
-    * duplicating it, even when it runs with a different partition count
-    * (idempotence replaces the reference's leader-side dedup,
-    * leader.py:241-246). A stale staging directory from a crashed attempt
-    * is deleted before the job, never merged.
-    *
-    * Not `DataFrameWriter.text`: its commit protocol (job and task temp
-    * directories, per-task commit renames, `_SUCCESS`) and the Hadoop
-    * conf it ships with every task were most of a small batch's sink time
-    * (OPTIMIZATION_r18.md). The driver and the tasks use the session's
-    * Hadoop conf, as the checkpoint does, so a per-session setting (say
-    * `spark.conf.set("fs.file.impl", ...)`) reaches the output too. It
-    * is read at the session's first batch (a streaming query runs all
-    * batches of one start in one session) and broadcast once for them. */
+    * Not `DataFrameWriter.text`: its commit protocol and the Hadoop conf
+    * it ships with every task were most of a small batch's sink time
+    * (OPTIMIZATION_r18.md). The session's Hadoop conf is used, as by the
+    * checkpoint, so a per-session setting (say `fs.file.impl`) reaches the
+    * output too; it is read and broadcast once per session. */
   def textSink(outDir: String)(batch: Dataset[org.apache.spark.sql.Row],
       batchId: Long): Unit = {
-    // Distributed write — records never funnel through the driver the way
-    // every reference record funnels through the leader (leader.py:212-246).
-    val sc = batch.sparkSession.sparkContext
     val (hadoopConf, conf) = sinkConf(batch.sparkSession)
     val target = new Path(outDir, s"batch-$batchId")
-    val staging = new Path(outDir, s"_staging-batch-$batchId")
-    val fs = target.getFileSystem(hadoopConf)
-    fs.delete(staging, true)
-    if (!fs.mkdirs(staging))
-      throw new java.io.IOException(s"cannot create $staging")
-    val stagingDir = staging.toString
-    val rows = batch
-      .select(concat_ws(":", batch.columns.map(col): _*).as("value"))
-      .queryExecution.toRdd
-    sc.runJob(rows, (ctx: TaskContext, it: Iterator[InternalRow]) =>
-      if (it.hasNext) {
-        val dir = new Path(stagingDir)
-        val fs = dir.getFileSystem(conf.value.value)
-        val part = new Path(dir, f"part-${ctx.partitionId()}%05d")
-        val tmp = new Path(dir,
-          f".part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}.tmp")
-        // non-recursive (the builder's default): a straggler attempt
-        // cannot recreate a staging directory already renamed away
-        val os = fs.createFile(tmp).overwrite(true).build()
-        try {
-          try it.foreach { r => r.getUTF8String(0).writeTo(os); os.write('\n') }
-          finally os.close()
-        } catch { case e: Throwable => fs.delete(tmp, false); throw e }
-        // a rename that loses to an earlier attempt of the same partition
-        // keeps that attempt's (identical) file
-        if (!fs.rename(tmp, part)) {
-          fs.delete(tmp, false)
-          if (!fs.exists(part))
-            throw new java.io.IOException(s"rename $tmp -> $part failed")
+    commit(target.getFileSystem(hadoopConf),
+        new Path(outDir, s"_staging-batch-$batchId"), target) { staging =>
+      writeParts(batch.select(concat_ws(":", batch.columns.map(col): _*)),
+        staging, conf)
+    }
+  }
+
+  /** One Spark job writing the string column of `lines` into the existing
+    * `dir`: a `part-<partition>` file per non-empty partition, each via a
+    * per-attempt temp file and a rename. Returns the number of lines. */
+  private def writeParts(lines: DataFrame, dir: Path,
+      conf: Broadcast[SerializableConfiguration]): Long = {
+    lines.sparkSession.sparkContext.runJob(lines.queryExecution.toRdd,
+      (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        var n = 0L
+        if (it.hasNext) {
+          val fs = dir.getFileSystem(conf.value.value)
+          val part = new Path(dir, f"part-${ctx.partitionId()}%05d")
+          val tmp = new Path(dir,
+            f".part-${ctx.partitionId()}%05d-${ctx.taskAttemptId()}.tmp")
+          // non-recursive (the builder's default): a straggler attempt
+          // cannot recreate a staging directory already renamed away
+          val os = fs.createFile(tmp).overwrite(true).build()
+          try {
+            try it.foreach { r =>
+              r.getUTF8String(0).writeTo(os); os.write('\n'); n += 1 }
+            finally os.close()
+          } catch { case e: Throwable => fs.delete(tmp, false); throw e }
+          // a rename that loses to an earlier attempt of the same partition
+          // keeps that attempt's (identical) file
+          if (!fs.rename(tmp, part)) {
+            fs.delete(tmp, false)
+            if (!fs.exists(part))
+              throw new IOException(s"rename $tmp -> $part failed")
+          }
         }
-      })
+        n
+      }).sum
+  }
+
+  /** Makes `target` appear whole or not at all: `write` fills a fresh
+    * `staging` directory (a stale one from a crashed attempt is deleted,
+    * never merged), then one rename replaces `target` with it. */
+  private def commit[T](fs: FileSystem, staging: Path, target: Path)(
+      write: Path => T): T = {
+    fs.delete(staging, true)
+    if (!fs.mkdirs(staging)) throw new IOException(s"cannot create $staging")
+    val result = write(staging)
     fs.delete(target, true)
     if (!fs.rename(staging, target))
-      throw new java.io.IOException(s"rename $staging -> $target failed")
+      throw new IOException(s"rename $staging -> $target failed")
+    result
   }
 
   // Per session, not per batch: a broadcast per batch added ≈10 ms to
@@ -178,112 +187,114 @@ object RainStormJob {
   private val sinkConfs = new java.util.WeakHashMap[SparkSession,
     (Configuration, Broadcast[SerializableConfiguration])]()
 
-  private def sinkConf(s: SparkSession)
-      : (Configuration, Broadcast[SerializableConfiguration]) =
-    sinkConfs.synchronized {
-      var c = sinkConfs.get(s)
-      if (c == null) {
-        val conf = s.sessionState.newHadoopConf()
-        c = (conf, s.sparkContext.broadcast(new SerializableConfiguration(conf)))
-        sinkConfs.put(s, c)
-      }
-      c
-    }
+  private def sinkConf(s: SparkSession) = sinkConfs.synchronized {
+    sinkConfs.computeIfAbsent(s, _ => {
+      val conf = s.sessionState.newHadoopConf()
+      (conf, s.sparkContext.broadcast(new SerializableConfiguration(conf)))
+    })
+  }
 
-  /** Small-file compaction for a directory of per-batch outputs — the
-    * analogue of HyDFS's multi-writer append + `merge` protocol
-    * (reference src/FileSystem/file_system.py:286-365): many small
-    * atomically-visible appends are periodically consolidated into few
-    * large text files. At 100 TB this is the nightly job that keeps scan
-    * partition counts sane.
-    *
-    * Inputs are the committed `batch-*` directories only; a sink's
-    * `_staging-batch-*` directory is neither read nor deleted.
-    *
-    * Crash-safe by manifest: the consolidated output is written to a
-    * dot-prefixed staging dir (invisible to `batch-*` readers), a
-    * `_consumed` manifest naming the input dirs is placed inside, and the
-    * staging dir is atomically renamed to `compacted-<n>` BEFORE the
-    * consumed inputs are deleted. A rerun after a crash first deletes any
-    * input dir named by an existing manifest (its data already lives in a
-    * committed compacted dir), so records are never duplicated.
-    *
-    * Known window: if the process crashes between the rename and the input
-    * deletion, readers see BOTH the compacted dir and the consumed inputs
-    * (duplicates) until the next compact() run cleans them up — same
-    * read-uncommitted window the reference's merge has between replica
-    * pushes (file_system.py:286-365). Exactly-once readers should read
-    * only `compacted-*` plus batches newer than the latest manifest.
-    */
-  def compact(spark: SparkSession, outDir: String, targetFiles: Int): Long = {
-    val dir = new java.io.File(outDir)
-    def list(prefix: String): Array[java.io.File] =
-      Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory && f.getName.startsWith(prefix))
-    // Manifests record content identity, not just names — a rebuilt stream
-    // (fresh checkpoint, same outDir) reuses batch ids, and deleting its
-    // NEW batch-0 because an old manifest mentions "batch-0" would silently
-    // lose data. Identity = name | file count | total bytes | MD5 over each
-    // file's (name, length, first 64 bytes), so "same count and byte total
-    // but different data" rebuilds are still distinguished.
-    def dirIdentity(b: java.io.File): String = {
-      val files = Option(b.listFiles()).getOrElse(Array.empty)
-        .filter(_.isFile).sortBy(_.getName)
-      val md = java.security.MessageDigest.getInstance("MD5")
-      files.foreach { f =>
-        md.update(s"${f.getName}:${f.length()}:".getBytes("UTF-8"))
-        val in = new java.io.FileInputStream(f)
-        try {
-          // loop: a single read() may legally return fewer than 64 bytes,
-          // which would make the identity depend on IO chunking
-          val buf = new Array[Byte](64)
-          var off = 0
-          var n = in.read(buf, off, buf.length - off)
-          while (n > 0) {
-            off += n
-            n = if (off < buf.length) in.read(buf, off, buf.length - off)
-                else -1
-          }
-          if (off > 0) md.update(buf, 0, off)
-        } finally in.close()
+  /** The committed output of a [[textSink]] directory: the part files of
+    * every `compacted-<n>` directory and of every `batch-<id>` that no
+    * `_consumed` manifest names, read through the session's Hadoop conf.
+    * Never a staging directory, a hidden file or a `.crc` sidecar. Every
+    * reader of sink output reads this, and [[compact]] picks its inputs
+    * by the same rule, so no reader sees a record twice. */
+  def committed(spark: SparkSession, outDir: String): Seq[Path] = {
+    val dir = new Path(outDir)
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    val (compacted, live, _) = outputs(fs, dir)
+    (compacted ++ live).flatMap(parts(fs, _))
+  }
+
+  private def parts(fs: FileSystem, d: Path): Seq[Path] =
+    fs.listStatus(d).toSeq.map(_.getPath).filter(_.getName.startsWith("part-"))
+
+  /** `dir`'s `compacted-<n>` directories, and its `batch-<id>` ones split
+    * into those no manifest names (live) and those one names (consumed). */
+  private def outputs(fs: FileSystem, dir: Path)
+      : (Seq[Path], Seq[Path], Seq[Path]) = {
+    val subdirs = if (!fs.exists(dir)) Nil
+      else fs.listStatus(dir).toSeq.filter(_.isDirectory).map(_.getPath)
+    def named(prefix: String) = subdirs.filter(_.getName.startsWith(prefix))
+    val compacted = named("compacted-")
+    val manifest = compacted.map(new Path(_, "_consumed")).filter(fs.exists)
+      .flatMap { m =>
+        val src = scala.io.Source.fromInputStream(fs.open(m), "UTF-8")
+        try src.getLines().filter(_.nonEmpty).toList finally src.close()
+      }.toSet
+    val (consumed, live) = named("batch-").partition { b =>
+      manifest.nonEmpty && {
+        val id = dirIdentity(fs, b)
+        manifest(id) || manifest(legacyIdentity(id))
       }
-      val hash = md.digest().map("%02x".format(_)).mkString
-      s"${b.getName}|${files.length}|${files.map(_.length()).sum}|$hash"
     }
-    // manifests written before the md5 segment was added carry only
-    // `name|count|bytes` — accept that prefix as a match, or an upgraded
-    // compactor would treat already-committed inputs as unconsumed and
-    // re-compact them (duplicating records)
-    def legacyIdentity(id: String): String =
-      id.split('|').take(3).mkString("|")
-    // recovery: drop inputs already committed into a compacted dir
-    val consumed = list("compacted-").flatMap { c =>
-      val m = new java.io.File(c, "_consumed")
-      if (m.isFile)
-        new String(java.nio.file.Files.readAllBytes(m.toPath), "UTF-8")
-          .split("\n").filter(_.nonEmpty)
-      else Array.empty[String]
-    }.toSet
-    list("batch-").filter { b =>
-      val id = dirIdentity(b)
-      consumed(id) || consumed(legacyIdentity(id))
-    }.foreach { b =>
-      b.listFiles().foreach(_.delete()); b.delete()
+    (compacted, live, consumed)
+  }
+
+  /** A batch directory's identity in a `_consumed` manifest: content, not
+    * just the name, because a rebuilt stream (fresh checkpoint, same
+    * outDir) reuses batch ids, and deleting its NEW batch-0 for an old
+    * manifest's "batch-0" would lose data. Identity = name | file count |
+    * total bytes | MD5 over each file's (name, length, first 64 bytes) in
+    * name order. The files include the `.crc` sidecars a checksummed
+    * filesystem hides, so its raw filesystem is read, as on disk. */
+  private def dirIdentity(fs: FileSystem, b: Path): String = {
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
     }
-    val batchDirs = list("batch-")
-    if (batchDirs.isEmpty) return 0L
-    val df = spark.read.text(batchDirs.map(_.getPath): _*)
-    val n = df.count()
-    val gen = list("compacted-").map(_.getName.stripPrefix("compacted-").toLong)
+    val files = raw.listStatus(b).filter(_.isFile).sortBy(_.getPath.getName)
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val head = new Array[Byte](64)
+    files.foreach { f =>
+      md.update(s"${f.getPath.getName}:${f.getLen}:".getBytes("UTF-8"))
+      val n = math.min(f.getLen, head.length.toLong).toInt
+      val in = raw.open(f.getPath)
+      try in.readFully(head, 0, n) finally in.close()
+      md.update(head, 0, n)
+    }
+    val hash = md.digest().map("%02x".format(_)).mkString
+    s"${b.getName}|${files.length}|${files.map(_.getLen).sum}|$hash"
+  }
+
+  // manifests written before the md5 segment was added carry only
+  // `name|count|bytes`; without this match their inputs would be
+  // compacted again (duplicating records)
+  private def legacyIdentity(id: String): String =
+    id.split('|').take(3).mkString("|")
+
+  /** Small-file compaction of a [[textSink]] directory into `targetFiles`
+    * part files, the analogue of HyDFS's multi-writer append + `merge`
+    * (reference src/FileSystem/file_system.py:286-365). Returns the number
+    * of records compacted. The inputs are the live batches of
+    * [[committed]] (never a `_staging-batch-*`). The sink's [[writeParts]]
+    * writes them into `.compact-staging-<n>`, next to a `_consumed`
+    * manifest of their identities, and the commit point is the rename to
+    * `compacted-<n>`: from then on [[committed]] skips the consumed
+    * batches, and deleting them is garbage collection. So a crash at any
+    * point shows every record exactly once, where the reference's merge
+    * shows duplicates between replica pushes; a rerun deletes what a
+    * crashed run left. */
+  def compact(spark: SparkSession, outDir: String, targetFiles: Int): Long = {
+    val (hadoopConf, conf) = sinkConf(spark)
+    val dir = new Path(outDir)
+    val fs = dir.getFileSystem(hadoopConf)
+    val (compacted, live, consumed) = outputs(fs, dir)
+    consumed.foreach(fs.delete(_, true))
+    if (live.isEmpty) return 0L
+    val gen = compacted.map(_.getName.stripPrefix("compacted-").toLong)
       .foldLeft(0L)(math.max) + 1
-    val staging = new java.io.File(dir, s".compact-staging-$gen")
-    df.repartition(targetFiles).write.mode("overwrite").text(staging.getPath)
-    java.nio.file.Files.write(new java.io.File(staging, "_consumed").toPath,
-      batchDirs.map(dirIdentity).mkString("\n").getBytes("UTF-8"))
-    val target = new java.io.File(dir, s"compacted-$gen")
-    if (!staging.renameTo(target))
-      throw new java.io.IOException(s"rename $staging -> $target failed")
-    batchDirs.foreach { b => b.listFiles().foreach(_.delete()); b.delete() }
+    val n = commit(fs, new Path(dir, s".compact-staging-$gen"),
+        new Path(dir, s"compacted-$gen")) { staging =>
+      val lines = spark.read.text(live.flatMap(parts(fs, _)).map(_.toString): _*)
+      val written = writeParts(lines.repartition(targetFiles), staging, conf)
+      val os = fs.create(new Path(staging, "_consumed"))
+      try os.write(live.map(dirIdentity(fs, _)).mkString("\n").getBytes("UTF-8"))
+      finally os.close()
+      written
+    }
+    live.foreach(fs.delete(_, true))
     n
   }
 

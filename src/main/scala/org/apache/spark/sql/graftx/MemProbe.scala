@@ -12,9 +12,6 @@ object MemProbe {
   def storageUsed: Long =
     Option(SparkEnv.get).map(_.memoryManager.storageMemoryUsed)
       .getOrElse(-1L)
-  def executionUsed: Long =
-    Option(SparkEnv.get).map(_.memoryManager.executionMemoryUsed)
-      .getOrElse(-1L)
   def gcMillis: Long = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * no replace tricks shared with either engine), the overlap semantics
   * (count overlapping adjacencies, merge greedily non-overlapping),
   * and the count/segment consistency between the two queries. */
-class BpeSpec extends AnyFunSuite {
+class BpeSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -82,7 +82,7 @@ class BpeSpec extends AnyFunSuite {
     // after merging: 'aa aa' -> (aa,aa) count 10, beats (b,c)=9
     assert(m(1) == (("aa", "aa", 10L)))
     // and the engine agrees on the same planted corpus via a temp table
-    val tmp = java.nio.file.Files.createTempDirectory("bpe").toString
+    val tmp = tempDir("bpe").getPath
     import spark.implicits._
     words.toSeq.zipWithIndex
       .flatMap { case ((w, f), i) => Seq.fill(f.toInt)((i.toLong, w)) }

@@ -14,7 +14,7 @@ import graft.streaming.{RainStormApps, RainStormJob}
 /** The engine's checkpoint file manager: which manager each filesystem
   * gets, and that checkpoints written under Spark's default manager stay
   * readable. */
-class CheckpointManagerSpec extends AnyFunSuite {
+class CheckpointManagerSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkTestSession()
 
@@ -26,7 +26,7 @@ class CheckpointManagerSpec extends AnyFunSuite {
       }
 
   test("local paths get the FileSystem-based manager, others Spark's") {
-    val dir = Files.createTempDirectory("ckpt-select").toFile
+    val dir = tempDir("ckpt-select")
     // scheme-less and file: paths both resolve to LocalFileSystem
     assert(chosen(spark, dir.getPath)
       .isInstanceOf[FileSystemBasedCheckpointFileManager])
@@ -50,7 +50,7 @@ class CheckpointManagerSpec extends AnyFunSuite {
     * same job restarted under the engine session: per key, the emitted
     * running counts are exactly 1..n. */
   private def restartsUnderEngine(first: SparkSession, ckptMustUse: Class[_]): Unit = {
-    val root = Files.createTempDirectory("ckpt-compat").toFile
+    val root = tempDir("ckpt-compat")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath
@@ -69,11 +69,7 @@ class CheckpointManagerSpec extends AnyFunSuite {
     RainStormJob.start(spark, in.getPath, ops, out, ckpt, stateful = true)
       .awaitTermination()
 
-    def parts(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(parts)
-      else if (f.getName.startsWith("part-")) Seq(f) else Nil
-    val emitted = parts(new java.io.File(out))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
+    val emitted = TempDirs.committedLines(spark, out)
       .map { l => val Array(k, n) = l.split(":"); k -> n.toInt }
       .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted }
     val want = (0 until 600).filter(_ % 3 == 0).groupBy(i => s"k${i % 7}")
@@ -98,7 +94,7 @@ class CheckpointManagerSpec extends AnyFunSuite {
     val plain = spark.newSession()
     plain.conf.set("fs.file.impl", stock.getName)
     plain.conf.set("fs.file.impl.disable.cache", "true")
-    val dir = Files.createTempDirectory("ckpt-stock").toString
+    val dir = tempDir("ckpt-stock").getPath
     assert(new Path(dir).getFileSystem(plain.sessionState.newHadoopConf())
       .getClass == stock)
     restartsUnderEngine(plain, classOf[FileSystemBasedCheckpointFileManager])

@@ -19,25 +19,17 @@ import graft.streaming._
   * run through the full streaming path (file source -> op chain ->
   * idempotent per-batch text sink), not a batch shortcut.
   */
-class ChurnFixtureSpec extends AnyFunSuite {
+class ChurnFixtureSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
 
   private def stageChurn(): java.io.File = {
-    val root = Files.createTempDirectory("churn-fix").toFile
+    val root = tempDir("churn-fix")
     val in = new java.io.File(root, "in"); in.mkdirs()
     Files.write(new java.io.File(in, "churn.csv").toPath,
       RainStormApps.syntheticChurnLines(10000)
         .mkString("\n").getBytes("UTF-8"))
     root
-  }
-
-  private def readOut(out: java.io.File): Seq[String] = {
-    def all(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(all) else Seq(f)
-    all(out).filter(f => f.getName.startsWith("part-") &&
-        !f.getName.endsWith(".crc"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
   }
 
   private def md5(s: String): String =
@@ -50,7 +42,7 @@ class ChurnFixtureSpec extends AnyFunSuite {
     val q = RainStormJob.start(spark, new java.io.File(root, "in").getPath,
       ops, out.getPath, new java.io.File(root, "ckpt").getPath, stateful)
     q.awaitTermination()
-    readOut(out)
+    TempDirs.committedLines(spark, out.getPath)
   }
 
   test("churn simple app (*France* -> CustomerId,Surname) matches goldens") {

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * (tx18), mixture-rebalancing sampling (tx19), and incremental
   * snapshot dedup (dd12).
   */
-class CorpusShapingSpec extends AnyFunSuite {
+class CorpusShapingSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -148,7 +148,7 @@ class CorpusShapingSpec extends AnyFunSuite {
       if (i == 28 || i == 5) i -> "!!! ... ???"
       else i -> s"$p tail$i extra$i"
     }.toMap
-    val dir = java.nio.file.Files.createTempDirectory("dd12")
+    val dir = tempDir("dd12").toPath
     ids.map(i => (i, text(i), "en", "s1", 0L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")

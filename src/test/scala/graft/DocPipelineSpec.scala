@@ -8,7 +8,7 @@ import graft.streaming.DocPipeline
 
 /** Streaming document ingest: quality gate + content dedup across
   * micro-batches, with whitespace-normalization catching disguised dups. */
-class DocPipelineSpec extends AnyFunSuite {
+class DocPipelineSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   import spark.implicits._
@@ -120,8 +120,7 @@ class DocPipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.streaming.Trigger
     import graft.core.Fingerprints
-    val root = java.nio.file.Files.createTempDirectory("ingest-restart")
-      .toFile
+    val root = tempDir("ingest-restart")
     val in = new java.io.File(root, "in")
     val out = new java.io.File(root, "out").getPath
     val ckpt = new java.io.File(root, "ckpt").getPath

@@ -10,7 +10,7 @@ import graft.streaming.EventStreams.{SessionEvent, SessionOut}
 
 /** Event-time streaming semantics: watermarked windows drop late data,
   * dedup-within-watermark drops replays, session windows close on gap. */
-class EventStreamsSpec extends AnyFunSuite {
+class EventStreamsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   import spark.implicits._
@@ -110,7 +110,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // drive the actual events parquet through the file-stream source
     val sf = "/root/testdata/sf0.001"
     // the file-stream source wants a directory: stage the file into one
-    val dir = java.nio.file.Files.createTempDirectory("ev-stream")
+    val dir = tempDir("ev-stream").toPath
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -147,7 +147,7 @@ class EventStreamsSpec extends AnyFunSuite {
     // window must agree with batch ev12's trailing-7-day count for the
     // window's last day.
     val sf = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("ra-stream")
+    val dir = tempDir("ra-stream").toPath
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))

@@ -11,7 +11,7 @@ import graft.operators.Grep
   * frequencies, then assert exact per-machine and total match counts for
   * frequent / medium / rare / regex patterns.
   */
-class GrepGoldenSpec extends AnyFunSuite {
+class GrepGoldenSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
 
@@ -22,7 +22,7 @@ class GrepGoldenSpec extends AnyFunSuite {
   // (the reference generator's split, generate_log.py:8-12), plus /product/N
   // URLs on every 5th line for the regex workload.
   private lazy val logDir: String = {
-    val dir = Files.createTempDirectory("golden-logs").toFile
+    val dir = tempDir("golden-logs")
     (1 to nMachines).foreach { m =>
       val sb = new StringBuilder
       (0 until linesPer).foreach { i =>
@@ -119,7 +119,7 @@ class GrepGoldenSpec extends AnyFunSuite {
     assert(all.length == 600 * nMachines)
     // --out's distributed text write round-trips every match without a
     // driver gather
-    val outDir = Files.createTempDirectory("dgrep-out").toFile
+    val outDir = tempDir("dgrep-out")
     val target = new java.io.File(outDir, "matches")
     runDgrep(spark, glob,
       DgrepArgs(Set.empty, "GET_frequent", None, Some(target.getPath)))
@@ -136,7 +136,7 @@ class GrepGoldenSpec extends AnyFunSuite {
     assert(counts("TOTAL") == 10L * nMachines)
     assert(counts.filter(_._1 != "TOTAL").values.forall(_ == 10L))
     // and -c --out writes the (file-set-bounded) counts distributed
-    val outDir = Files.createTempDirectory("dgrep-cout").toFile
+    val outDir = tempDir("dgrep-cout")
     val target = new java.io.File(outDir, "counts")
     runDgrep(spark, s"$logDir/*.log",
       DgrepArgs(Set('c'), "GET_frequent", None, Some(target.getPath)))

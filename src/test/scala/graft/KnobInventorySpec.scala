@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * text (no Spark). Every session comes from `EngineConf.builder`, and
   * the environment variables and system properties the engine reads are
   * exactly the ones listed here (README "Settings"). A new knob, a
-  * second hand-built session or a new `main` has to change a list here
-  * on purpose. */
+  * second hand-built session, a new `main` or a second reader of
+  * RainStorm's part files has to change a list here on purpose. */
 class KnobInventorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -88,6 +88,17 @@ class KnobInventorySpec extends AnyFunSuite {
     } yield root.relativize(p).toString
     assert(sites == Seq("graft/Bench.scala", "graft/PlanDump.scala",
       "graft/ScaleData.scala", "graft/Verify.scala", "graft/cli/Main.scala"))
+  }
+
+  test("RainStorm's committed-output reader is the one reader of " +
+      "part files") {
+    // a second reader of the sink's output would disagree with
+    // `RainStormJob.committed` about staged and consumed batches
+    val part = """startsWith\s*\(\s*"part-"""".r
+    val sites = for {
+      (p, src) <- sources if part.findFirstIn(src).nonEmpty
+    } yield root.relativize(p).toString
+    assert(sites == Seq("graft/streaming/RainStorm.scala"))
   }
 
   test("the env vars and system properties read are the listed knobs") {

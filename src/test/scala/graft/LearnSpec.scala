@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    above the majority baseline), and
   *  - the plan shapes that decide 100 TB survival.
   */
-class LearnSpec extends AnyFunSuite {
+class LearnSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -96,8 +96,7 @@ class LearnSpec extends AnyFunSuite {
 
   test("em01/em02: planted dominant direction is recovered " +
       "(synthetic corpus, known spectrum)") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("learn-planted").toString
+    val dir = tempDir("learn-planted").getPath
     // u = alternating-sign ramp, deterministic noise from the indices —
     // one direction carries ~100x the variance of any noise axis
     val u = Array.tabulate(Dim)(j =>

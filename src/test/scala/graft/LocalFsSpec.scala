@@ -15,7 +15,7 @@ import graft.core.LocalFs
 /** The engine's `file:` filesystem: what engine sessions resolve, that it
   * gives exactly the mode bits and rename results of Hadoop's own local
   * filesystem, and that it sets them without launching a process. */
-class LocalFsSpec extends AnyFunSuite {
+class LocalFsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
 
@@ -33,7 +33,7 @@ class LocalFsSpec extends AnyFunSuite {
   private def path(f: File): Path = new Path(f.toURI)
 
   test("engine sessions resolve file: to LocalFs, a LocalFileSystem") {
-    val tmp = Files.createTempDirectory("localfs").toString
+    val tmp = tempDir("localfs").getPath
     val fs = new Path(tmp).getFileSystem(spark.sessionState.newHadoopConf())
     assert(fs.getClass == classOf[LocalFs])
     assert(fs.isInstanceOf[LocalFileSystem])
@@ -42,7 +42,7 @@ class LocalFsSpec extends AnyFunSuite {
   test("create and mkdirs give the mode bits of Hadoop's LocalFileSystem") {
     for ((umask, dir, file, grp) <- Seq(("022", 0x1ed, 0x1a4, 0x1a0),
         ("077", 0x1c0, 0x180, 0x180))) {
-      val root = Files.createTempDirectory("localfs-mode").toFile
+      val root = tempDir("localfs-mode")
       def made(fs: LocalFileSystem, side: String): Seq[(String, Int)] = {
         val d = new File(root, side)
         assert(fs.mkdirs(path(new File(d, "a/b"))))
@@ -61,7 +61,7 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a setgid directory keeps its bits as Hadoop's LocalFileSystem keeps them") {
-    val root = Files.createTempDirectory("localfs-setgid").toFile
+    val root = tempDir("localfs-setgid")
     def made(fs: LocalFileSystem, side: String): Seq[(String, Int)] = {
       val d = new File(root, side)
       assert(d.mkdir())
@@ -80,7 +80,7 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a sticky-bit request is applied") {
-    val root = Files.createTempDirectory("localfs-sticky").toFile
+    val root = tempDir("localfs-sticky")
     for ((fs, side) <- Seq(init(new LocalFileSystem, "022") -> "stock",
         init(new LocalFs, "022") -> "ours")) {
       val d = new File(root, side)
@@ -92,7 +92,7 @@ class LocalFsSpec extends AnyFunSuite {
 
   test("a rename onto an existing file returns false and keeps that file") {
     val fs = init(new LocalFs, "022")
-    val root = Files.createTempDirectory("localfs-rename").toFile
+    val root = tempDir("localfs-rename")
     def write(n: String, s: String): Unit = {
       val os = fs.create(path(new File(root, n)))
       try os.write(s.getBytes("UTF-8")) finally os.close()
@@ -120,7 +120,7 @@ class LocalFsSpec extends AnyFunSuite {
       finally src.close()
     }
     def count(fs: LocalFileSystem): Long = {
-      val root = Files.createTempDirectory("localfs-forks").toFile
+      val root = tempDir("localfs-forks")
       val before = launched()
       for (i <- 0 until 200) {
         fs.create(path(new File(root, s"f$i"))).close()

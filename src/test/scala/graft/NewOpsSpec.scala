@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-2 operators: char-n-gram language ID, token heavy hitters +
   * count-min-sketch estimates, media embed + knn. */
-class NewOpsSpec extends AnyFunSuite {
+class NewOpsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -50,7 +50,7 @@ class NewOpsSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     // no document reaches 3 chars -> no profiles exist
-    val dir = java.nio.file.Files.createTempDirectory("tiny-docs")
+    val dir = tempDir("tiny-docs").toPath
     Seq((1L, "ab", "en", "s0", 2L), (2L, "x", "fr", "s1", 1L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$dir/documents.parquet")
@@ -267,7 +267,7 @@ class NewOpsSpec extends AnyFunSuite {
       (1000L + i,
         base(i)._2.map(x => x + (rnd.nextGaussian() * 0.001).toFloat))
     }
-    val dir = java.nio.file.Files.createTempDirectory("dd13")
+    val dir = tempDir("dd13").toPath
     (base ++ dups).map { case (id, v) => (id, v.toSeq, 0) }
       .toDF("vec_id", "embedding", "label")
       .write.parquet(s"$dir/embeddings.parquet")

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Cross-engine correctness (every stage count and fingerprint vs the
   * nine-stage DuckDB CTE replay) is the driver gate's job; these pin
   * the engine-side structural properties the oracle cannot see. */
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -57,7 +57,7 @@ class PipelineSpec extends AnyFunSuite {
       val w = (0 until 45).map(j => s"w${(id * 119 + j * 29 + j * j) % 300}")
       (w.take(10) ++ planted.getOrElse(id, Nil) ++ w.drop(10)).mkString(" ")
     }
-    val dir = java.nio.file.Files.createTempDirectory("pp01-spans").toFile
+    val dir = tempDir("pp01-spans")
     graft.core.ParquetFiles.writeSingle((0 until 40)
         .map(id => (id.toLong, text(id), Seq("en", "fr")(id % 2), s"src${id % 4}"))
         .toDF("doc_id", "text", "lang", "source"),

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * no unbroadcast cartesian products) — so they are asserted here, not
   * eyeballed in `.explain` output once and forgotten.
   */
-class PlanAuditSpec extends AnyFunSuite {
+class PlanAuditSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -231,7 +231,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("Tables.wide gates its exchange on the physical parquet layout") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("wide-gate").toFile
+    val root = tempDir("wide-gate")
     val hconf = spark.sparkContext.hadoopConfiguration
     // single-FILE layout (driver testdata shape): move the part file
     def writeTable(dir: java.io.File, rows: Long, blockBytes: Int): Unit = {

@@ -12,7 +12,7 @@ import graft.streaming._
   * kill/restart from checkpoint must not duplicate or lose records
   * (recovery parity with reference src/Streaming/worker.py:327-368).
   */
-class RainStormSpec extends AnyFunSuite {
+class RainStormSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkTestSession()
   import spark.implicits._
@@ -28,16 +28,18 @@ class RainStormSpec extends AnyFunSuite {
     Files.write(f.toPath, lines.mkString("\n").getBytes("UTF-8"))
   }
 
-  private def readOut(out: java.io.File): Seq[String] = {
-    def all(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(all) else Seq(f)
-    all(out).filter(f => f.getName.startsWith("part-") &&
-        !f.getName.endsWith(".crc"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
-  }
+  private def readOut(out: java.io.File): Seq[String] =
+    TempDirs.committedLines(spark, out.getPath)
+
+  /** `k<i>:v<i>` rows for `ids`, in sink input shape. */
+  private def kv(ids: Range) =
+    ids.map(i => (s"k$i", s"v$i")).toDF("key", "value")
+
+  private def kvLines(ids: Range): Seq[String] =
+    ids.map(i => s"k$i:v$i").sorted
 
   test("simple app: stream == batch, restart-safe") {
-    val root = Files.createTempDirectory("rs-simple").toFile
+    val root = tempDir("rs-simple")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out")
     val ckpt = new java.io.File(root, "ckpt").getPath
@@ -61,7 +63,7 @@ class RainStormSpec extends AnyFunSuite {
   }
 
   test("complex app: final per-key counts == batch groupBy count") {
-    val root = Files.createTempDirectory("rs-complex").toFile
+    val root = tempDir("rs-complex")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out")
     val ckpt = new java.io.File(root, "ckpt").getPath
@@ -91,7 +93,7 @@ class RainStormSpec extends AnyFunSuite {
   }
 
   test("op chains generalize past the reference's fixed 2-op topology") {
-    val root = Files.createTempDirectory("rs-chain").toFile
+    val root = tempDir("rs-chain")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out")
     writeCsv(in, 0, 200)
@@ -112,7 +114,7 @@ class RainStormSpec extends AnyFunSuite {
   }
 
   test("compaction consolidates batch outputs losslessly (merge analogue)") {
-    val root = Files.createTempDirectory("rs-compact").toFile
+    val root = tempDir("rs-compact")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out")
     val ckpt = new java.io.File(root, "ckpt").getPath
@@ -132,22 +134,19 @@ class RainStormSpec extends AnyFunSuite {
   }
 
   test("textSink: a replayed batch id replaces the batch, staging never leaks") {
-    val out = new java.io.File(
-      Files.createTempDirectory("rs-sink").toFile, "out")
-    val rows = (0 until 40).map(i => (s"k$i", s"v$i")).toDF("key", "value")
-    val want = (0 until 40).map(i => s"k$i:v$i").sorted
+    val out = new java.io.File(tempDir("rs-sink"), "out")
+    val rows = kv(0 until 40)
+    val want = kvLines(0 until 40)
     val sink = RainStormJob.textSink(out.getPath) _
     def files(b: String): Seq[String] =
       new java.io.File(out, b).list().toSeq.sorted
-    def lines(b: String): Seq[String] =
-      readOut(new java.io.File(out, b)).sorted
 
     // the replay of batch 7 runs with a different partition count: one
     // copy of the rows, in the replay's single part file
     sink(rows.repartition(4), 7L)
     assert(files("batch-7").count(_.startsWith("part-")) == 4)
     sink(rows.coalesce(1), 7L)
-    assert(lines("batch-7") == want)
+    assert(readOut(out).sorted == want)
     assert(files("batch-7").count(_.startsWith("part-")) == 1)
 
     // a crashed attempt's staging directory is replaced, not merged
@@ -155,22 +154,33 @@ class RainStormSpec extends AnyFunSuite {
     Files.write(new java.io.File(stale, "part-00009").toPath,
       "stale:row\n".getBytes("UTF-8"))
     sink(rows.filter(col("key") === "k1"), 8L)
-    assert(lines("batch-8") == Seq("k1:v1"))
+    assert(readOut(out).sorted == (want :+ "k1:v1").sorted)
 
     // an empty batch is an empty, visible directory
     sink(rows.filter(lit(false)), 9L)
     assert(files("batch-9").isEmpty)
     assert(out.list().toSeq.sorted == Seq("batch-7", "batch-8", "batch-9"))
 
-    // compact() skips an in-flight staging directory and loses nothing
+    // compact() skips an in-flight staging directory and loses nothing;
+    // the committed output never includes it
     val inflight = new java.io.File(out, "_staging-batch-10")
     inflight.mkdirs()
     Files.write(new java.io.File(inflight, "part-00000").toPath,
       "k99:v99\n".getBytes("UTF-8"))
     assert(RainStormJob.compact(spark, out.getPath, targetFiles = 1) == 41)
     assert(out.list().toSeq.sorted == Seq("_staging-batch-10", "compacted-1"))
-    assert(lines("compacted-1") == (want :+ "k1:v1").sorted)
-    assert(lines("_staging-batch-10") == Seq("k99:v99"))
+    assert(files("compacted-1") ==
+      Seq("._consumed.crc", ".part-00000.crc", "_consumed", "part-00000"))
+    assert(readOut(out).sorted == (want :+ "k1:v1").sorted)
+    assert(Files.readAllLines(new java.io.File(inflight, "part-00000").toPath)
+      .toArray.toSeq == Seq("k99:v99"))
+
+    // an empty batch alone is compacted away too
+    sink(rows.filter(lit(false)), 11L)
+    assert(RainStormJob.compact(spark, out.getPath, targetFiles = 1) == 0)
+    assert(out.list().toSeq.sorted ==
+      Seq("_staging-batch-10", "compacted-1", "compacted-2"))
+    assert(readOut(out).sorted == (want :+ "k1:v1").sorted)
   }
 
   test("textSink writes through the session's Hadoop conf") {
@@ -180,8 +190,7 @@ class RainStormSpec extends AnyFunSuite {
     session.conf.set("fs.file.impl", classOf[RecordingLocalFs].getName)
     session.conf.set("fs.file.impl.disable.cache", "true")
     RecordingLocalFs.renamed.clear()
-    val out = new java.io.File(
-      Files.createTempDirectory("rs-sink-conf").toFile, "out")
+    val out = new java.io.File(tempDir("rs-sink-conf"), "out")
     val rows = session.range(40)
       .selectExpr("concat('k', id) AS key", "concat('v', id) AS value")
       .repartition(2)
@@ -194,11 +203,81 @@ class RainStormSpec extends AnyFunSuite {
     // the tasks' part-file renames and the driver's batch commit
     import scala.jdk.CollectionConverters._
     assert(RecordingLocalFs.renamed.asScala.toSet == parts + "batch-3")
-    assert(readOut(batch).sorted == (0 until 40).map(i => s"k$i:v$i").sorted)
+    assert(readOut(out).sorted == kvLines(0 until 40))
+  }
+
+  test("compaction: a crash at any point shows every record once, " +
+      "and a rerun converges") {
+    // the session's own `file:` filesystem, which fails at one point of
+    // the compaction's commit; uncached, as in the sink test above
+    val crashing = spark.newSession()
+    crashing.conf.set("fs.file.impl", classOf[CrashingLocalFs].getName)
+    crashing.conf.set("fs.file.impl.disable.cache", "true")
+    val want = kvLines(0 until 30)
+    for (point <- Seq("staged", "renamed", "deleting")) {
+      val out = new java.io.File(tempDir(s"rs-crash-$point"), "out")
+      (0 until 3).foreach { b =>
+        RainStormJob.textSink(out.getPath)(kv(b * 10 until b * 10 + 10)
+          .repartition(2), b.toLong)
+      }
+      CrashingLocalFs.arm(point)
+      try intercept[CrashingLocalFs.Crash] {
+        RainStormJob.compact(crashing, out.getPath, targetFiles = 1)
+      } finally CrashingLocalFs.arm("")
+
+      val listed = CrashingLocalFs.listed.get
+      assert(TempDirs.committedLines(crashing, out.getPath).sorted == want,
+        point)
+      assert(CrashingLocalFs.listed.get > listed, "committed used the " +
+        "session's filesystem")
+      assert(readOut(out).sorted == want, point)
+
+      val redone = if (point == "staged") want.size else 0
+      assert(RainStormJob.compact(crashing, out.getPath, targetFiles = 1)
+        == redone, point)
+      assert(readOut(out).sorted == want, point)
+      assert(out.list().toSeq.sorted == Seq("compacted-1"), point)
+    }
+  }
+
+  test("manifests of the earlier identity formats still consume their " +
+      "batches") {
+    val out = new java.io.File(tempDir("rs-manifest"), "out")
+    (0 until 3).foreach { b =>
+      RainStormJob.textSink(out.getPath)(kv(b * 10 until b * 10 + 10)
+        .repartition(2), b.toLong)
+    }
+    // The identity as earlier releases wrote it: every file of the batch
+    // directory, `.crc` sidecars included, in name order.
+    def identity(b: java.io.File): String = {
+      val files = b.listFiles().filter(_.isFile).sortBy(_.getName)
+      val md = java.security.MessageDigest.getInstance("MD5")
+      files.foreach { f =>
+        md.update(s"${f.getName}:${f.length()}:".getBytes("UTF-8"))
+        md.update(Files.readAllBytes(f.toPath).take(64))
+      }
+      s"${b.getName}|${files.length}|${files.map(_.length()).sum}|" +
+        md.digest().map("%02x".format(_)).mkString
+    }
+    val id0 = identity(new java.io.File(out, "batch-0"))
+    assert(id0.split('|')(1) == "4") // two parts, two sidecars
+    val legacy1 = identity(new java.io.File(out, "batch-1"))
+      .split('|').take(3).mkString("|")
+    // compacted-1 holds batches 0 and 1, as a crashed compaction left it
+    val c = new java.io.File(out, "compacted-1"); c.mkdirs()
+    Files.write(new java.io.File(c, "part-00000-0-c000.txt").toPath,
+      kvLines(0 until 20).mkString("", "\n", "\n").getBytes("UTF-8"))
+    Files.write(new java.io.File(c, "_consumed").toPath,
+      s"$id0\n$legacy1".getBytes("UTF-8"))
+
+    assert(readOut(out).sorted == kvLines(0 until 30))
+    assert(RainStormJob.compact(spark, out.getPath, targetFiles = 1) == 10)
+    assert(out.list().toSeq.sorted == Seq("compacted-1", "compacted-2"))
+    assert(readOut(out).sorted == kvLines(0 until 30))
   }
 
   test("rainstorm CLI listener prints one line per committed batch") {
-    val root = Files.createTempDirectory("rs-progress").toFile
+    val root = tempDir("rs-progress")
     val in = new java.io.File(root, "in"); in.mkdirs()
     (0 until 3).foreach(w => writeCsv(in, w * 100, (w + 1) * 100))
     val printed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -230,7 +309,7 @@ class RainStormSpec extends AnyFunSuite {
   }
 
   test("flatMapOp escape hatch matches reference flatMap contract") {
-    val root = Files.createTempDirectory("rs-flatmap").toFile
+    val root = tempDir("rs-flatmap")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out")
     writeCsv(in, 0, 100)
@@ -259,4 +338,42 @@ class RecordingLocalFs extends graft.core.LocalFs {
 
 object RecordingLocalFs {
   val renamed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
+
+/** The engine's `file:` filesystem, failing at one point of
+  * `RainStormJob.compact`'s commit when armed: "staged" before the rename
+  * to `compacted-<n>`, "renamed" right after it, "deleting" at the second
+  * delete of a `batch-*` directory. Counts its directory listings. */
+class CrashingLocalFs extends graft.core.LocalFs {
+  import CrashingLocalFs._
+  import org.apache.hadoop.fs.{FileStatus, Path}
+
+  override def listStatus(p: Path): Array[FileStatus] = {
+    listed.incrementAndGet()
+    super.listStatus(p)
+  }
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    val commit = dst.getName.startsWith("compacted-")
+    if (commit && armed == "staged") throw new Crash
+    val done = super.rename(src, dst)
+    if (commit && armed == "renamed") throw new Crash
+    done
+  }
+
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    if (armed == "deleting" && p.getName.startsWith("batch-") &&
+        deletes.incrementAndGet() == 2) throw new Crash
+    super.delete(p, recursive)
+  }
+}
+
+object CrashingLocalFs {
+  class Crash extends java.io.IOException("injected crash")
+
+  @volatile private var armed = ""
+  private val deletes = new java.util.concurrent.atomic.AtomicInteger()
+  val listed = new java.util.concurrent.atomic.AtomicLong()
+
+  def arm(point: String): Unit = { deletes.set(0); armed = point }
 }

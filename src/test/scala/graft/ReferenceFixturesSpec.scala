@@ -23,27 +23,21 @@ import graft.streaming._
   * source -> op chain -> idempotent per-batch text sink), not a batch
   * shortcut, so this is end-to-end final-state equality.
   */
-class ReferenceFixturesSpec extends AnyFunSuite {
+class ReferenceFixturesSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
 
   private val fixtures = "/root/reference/test_files"
+  // overridable with the knob `graft.Bench` reads for the same files
+  private val fixtureRoot = sys.env.getOrElse("SPARK_GRAFT_FIXTURES", fixtures)
 
   /** Copy a read-only fixture into a fresh streaming input dir. */
   private def stage(name: String): java.io.File = {
-    val root = Files.createTempDirectory(s"ref-fix-$name").toFile
+    val root = tempDir(s"ref-fix-$name")
     val in = new java.io.File(root, "in"); in.mkdirs()
-    Files.copy(new java.io.File(fixtures, name).toPath,
+    Files.copy(new java.io.File(fixtureRoot, name).toPath,
       new java.io.File(in, name).toPath, StandardCopyOption.REPLACE_EXISTING)
     root
-  }
-
-  private def readOut(out: java.io.File): Seq[String] = {
-    def all(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(all) else Seq(f)
-    all(out).filter(f => f.getName.startsWith("part-") &&
-        !f.getName.endsWith(".crc"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
   }
 
   private def md5(s: String): String =
@@ -57,7 +51,7 @@ class ReferenceFixturesSpec extends AnyFunSuite {
     val q = RainStormJob.start(spark, new java.io.File(root, "in").getPath,
       ops, out.getPath, new java.io.File(root, "ckpt").getPath, stateful)
     q.awaitTermination()
-    readOut(out)
+    TempDirs.committedLines(spark, out.getPath)
   }
 
   test("simple app over TrafficSigns_10000 matches the reference goldens") {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-8 operators: span dedup (dd11), PII redaction (tx15),
   * deterministic corpus split (tx16), Bloom decontamination (tx17). */
-class Round8Spec extends AnyFunSuite {
+class Round8Spec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -20,7 +20,7 @@ class Round8Spec extends AnyFunSuite {
     val c = (1 to 10).map(i => s"c$i").mkString(" ")
     val e = (1 to 10).map(i => s"e$i").mkString(" ")
     val tail = "t1 t2 t3 t4 t5"
-    val dir = java.nio.file.Files.createTempDirectory("dd11")
+    val dir = tempDir("dd11").toPath
     Seq(
       (1L, s"$a $b $tail", "en", "s1", 0L),
       (2L, s"$a $c $tail", "en", "s1", 0L),

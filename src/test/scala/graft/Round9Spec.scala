@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * rerank (sim07). Oracled entries (tx22/tx24/dd14/dd15/ev14/q33) are
   * additionally gated by the DuckDB compare; these specs pin the
   * non-SQL invariants and the independent-formulation equalities. */
-class Round9Spec extends AnyFunSuite {
+class Round9Spec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -109,7 +109,7 @@ class Round9Spec extends AnyFunSuite {
     import spark.implicits._
     // doc 2 is the first third of doc 1: containment 1.0, Jaccard ~0.33
     val words = (1 to 90).map(i => s"w$i")
-    val dir = java.nio.file.Files.createTempDirectory("dd15")
+    val dir = tempDir("dd15").toPath
     Seq(
       (1L, words.mkString(" "), "en", "s1", 0L),
       (2L, words.take(30).mkString(" "), "en", "s1", 0L),

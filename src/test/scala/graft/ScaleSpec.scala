@@ -1,13 +1,12 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Scale
 
 /** Scale-technique proofs: salted aggregation equals plain aggregation,
   * and bucketed tables join without an exchange. */
-class ScaleSpec extends AnyFunSuite {
+class ScaleSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -29,7 +28,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("partitioned writes prune partitions at the scan") {
-    val dir = Files.createTempDirectory("parted").toFile.getPath
+    val dir = tempDir("parted").getPath
     val ev = graft.core.Tables(spark, sf, "events")
       .withColumn("day", date_trunc("day", col("ts")).cast("date"))
     ev.write.mode("overwrite").partitionBy("day").parquet(s"$dir/events")
@@ -45,7 +44,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("bucketed tables join with zero exchanges") {
-    val wh = Files.createTempDirectory("bucketed").toFile.getPath
+    val wh = tempDir("bucketed").getPath
     spark.sql(s"CREATE DATABASE IF NOT EXISTS graft_bk LOCATION '$wh'")
     val li = graft.core.Tables(spark, sf, "lineitem")
     val o = graft.core.Tables(spark, sf, "orders")

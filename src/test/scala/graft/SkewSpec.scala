@@ -15,7 +15,7 @@ import graft.core.InvertedIndex
   * must be a lossless prune or a spec'd df-cap drop, never a recall
   * trade the oracle can't see).
   */
-class SkewSpec extends AnyFunSuite {
+class SkewSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   private val Cap = InvertedIndex.StopKeyCap
@@ -105,7 +105,7 @@ class SkewSpec extends AnyFunSuite {
 
   test("a cluster holding 50% of the corpus: dd02/dd06 exact on the " +
       "full clique, candidate work bounded by C(cluster,2)") {
-    val root = java.nio.file.Files.createTempDirectory("skew-half").toFile
+    val root = tempDir("skew-half")
     val n = 400; val half = 200
     // 200 identical docs + 200 docs with fully private vocabularies
     val docs = (0 until n).map { i =>
@@ -144,7 +144,7 @@ class SkewSpec extends AnyFunSuite {
 
   test("a cluster larger than the df cap: its shingles are stop-keys — " +
       "zero candidates from the clique, planted normal pairs unaffected") {
-    val root = java.nio.file.Files.createTempDirectory("skew-cap").toFile
+    val root = tempDir("skew-cap")
     val big = Cap + 500
     val docs = (0 until big).map(i => (i.toLong, clusterText("c"))) ++
       Seq((big.toLong, clusterText("p")), ((big + 1).toLong, clusterText("p")))

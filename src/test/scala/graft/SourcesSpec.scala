@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * documents table, whose text column stresses quoting; timestamps ride
   * the binary formats, whose precision is lossless.)
   */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
   val sf = "/root/testdata/sf0.001"
@@ -24,7 +24,7 @@ class SourcesSpec extends AnyFunSuite {
     val cols = src.columns.toSeq
     val want = canon(src, cols)
     assert(want.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("fmt").toString
+    val dir = tempDir("fmt").getPath
 
     src.write.parquet(s"$dir/p")
     assert(canon(spark.read.parquet(s"$dir/p"), cols) == want, "parquet")
@@ -48,7 +48,7 @@ class SourcesSpec extends AnyFunSuite {
     val cols = src.columns.toSeq
     val want = canon(src, cols)
     assert(want.nonEmpty)
-    val dir = java.nio.file.Files.createTempDirectory("fmt-ev").toString
+    val dir = tempDir("fmt-ev").getPath
 
     src.write.parquet(s"$dir/p")
     assert(canon(spark.read.parquet(s"$dir/p"), cols) == want, "parquet")

@@ -11,12 +11,12 @@ import graft.streaming.{RainStormApps, RainStormJob}
   * from job start to last output. The engine must beat both comfortably on
   * one machine.
   */
-class ThroughputSpec extends AnyFunSuite {
+class ThroughputSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark = SparkTestSession()
 
   test("simple app >= 10x the reference's ~84-330 rec/s on 10k rows") {
-    val root = Files.createTempDirectory("rs-thru").toFile
+    val root = tempDir("rs-thru")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out")
     // 10k-row CSV in the Traffic-Signs shape; ~60% match the filter.
@@ -46,11 +46,7 @@ class ThroughputSpec extends AnyFunSuite {
     q.awaitTermination()
     val secs = (System.nanoTime() - t0) / 1e9
 
-    def allFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(allFiles) else Seq(f)
-    val nOut = allFiles(out)
-      .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-      .map(f => scala.io.Source.fromFile(f).getLines().size).sum
+    val nOut = TempDirs.committedLines(spark, out.getPath).size
 
     assert(nOut == 6000)
     val rate = nOut / secs
@@ -60,7 +56,7 @@ class ThroughputSpec extends AnyFunSuite {
   }
 
   test("complex (stateful) app beats the reference's stateful path") {
-    val root = Files.createTempDirectory("rs-thru2").toFile
+    val root = tempDir("rs-thru2")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out")
     val lines = (0 until 10000).map { i =>
@@ -77,11 +73,7 @@ class ThroughputSpec extends AnyFunSuite {
     q.awaitTermination()
     val secs = (System.nanoTime() - t0) / 1e9
 
-    def allFiles(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles.toSeq.flatMap(allFiles) else Seq(f)
-    val outputs = allFiles(out)
-      .filter(f => f.getName.startsWith("part-") && !f.getName.endsWith(".crc"))
-      .flatMap(f => scala.io.Source.fromFile(f).getLines().toList)
+    val outputs = TempDirs.committedLines(spark, out.getPath)
     // per-update emission: one output per matching input (3334 matches)
     assert(outputs.size == (0 until 10000).count(_ % 3 == 0))
     val rate = outputs.size / secs
