@@ -522,7 +522,11 @@ object Bench {
         .map(_.toString): _*).count() / secs)
     }
 
-    // Warm the streaming machinery (class loading, codegen) off the clock.
+    // Warm the streaming machinery off the clock: class loading, and the
+    // generated code this query shares with the rows (every query's tasks
+    // run in one classloader, so Spark's generated-class cache serves
+    // them all; see EngineConf). A row's own filter, projection and state
+    // code still compiles once, in the first of the three passes.
     run("warmup", in => Files.write(new java.io.File(in, "w.csv").toPath,
         "0,sign,Unpunched Telespar,cat0".getBytes("UTF-8")),
       RainStormApps.simpleApp("Unpunched Telespar", 0, 3), stateful = false)

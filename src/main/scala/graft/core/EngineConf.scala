@@ -29,6 +29,19 @@ import org.apache.spark.sql.SparkSession
   * built without this function before that moment leaves the cap at 100
   * for the whole JVM.
   *
+  * `spark.sql.artifact.isolation.enabled=false` runs every session's
+  * tasks in the executor's one default classloader. That cache's key
+  * includes the classloader, and with isolation on each session gets its
+  * own: every streaming query start clones its session, so every start
+  * and every restart of a query recompiled all the generated code its
+  * first batch ran (81 compiles per `rainstorm` benchmark run, 15 on
+  * each stateful restart; OPTIMIZATION_r23.md). Isolation keeps the
+  * jars, files and classes a session adds with `addArtifact` from other
+  * sessions. The engine adds none (`KnobInventorySpec` pins that), and
+  * `spark.jars` is application-wide, shipped to the default classloader
+  * either way, so turning it off gives nothing up here. Also a static
+  * conf: it holds from the builder that creates the JVM's SparkContext.
+  *
   * The two AQE settings keep Spark's defaults, which won the A/B
   * measurements recorded in OPTIMIZATION_r17.md: coalescing inside cache
   * materialization (`canChangeCachedPlanOutputPartitioning=true`) won
@@ -74,6 +87,7 @@ object EngineConf {
   def apply(b: SparkSession.Builder): SparkSession.Builder = b
     .config("spark.sql.codegen.cache.maxEntries",
       CodegenCacheMaxEntries.toString)
+    .config("spark.sql.artifact.isolation.enabled", "false")
     .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
     .config(LocalCheckpointFileManager.ConfKey,
       classOf[LocalCheckpointFileManager].getName)

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileContextBasedCheckpointFileManager, FileSystemBasedCheckpointFileManager}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -48,8 +49,9 @@ class CheckpointManagerSpec extends AnyFunSuite with TempDirs {
 
   /** A `complexApp` checkpoint and output written by `first`, then the
     * same job restarted under the engine session: per key, the emitted
-    * running counts are exactly 1..n. */
-  private def restartsUnderEngine(first: SparkSession, ckptMustUse: Class[_]): Unit = {
+    * running counts are exactly 1..n. Returns the restarted query. */
+  private def restartsUnderEngine(first: SparkSession,
+      ckptMustUse: Class[_]): StreamingQuery = {
     val root = tempDir("ckpt-compat")
     val in = new java.io.File(root, "in"); in.mkdirs()
     val out = new java.io.File(root, "out").getPath
@@ -66,8 +68,9 @@ class CheckpointManagerSpec extends AnyFunSuite with TempDirs {
       .awaitTermination()
 
     writeCsv(300, 600)
-    RainStormJob.start(spark, in.getPath, ops, out, ckpt, stateful = true)
-      .awaitTermination()
+    val restarted =
+      RainStormJob.start(spark, in.getPath, ops, out, ckpt, stateful = true)
+    restarted.awaitTermination()
 
     val emitted = TempDirs.committedLines(spark, out)
       .map { l => val Array(k, n) = l.split(":"); k -> n.toInt }
@@ -75,6 +78,7 @@ class CheckpointManagerSpec extends AnyFunSuite with TempDirs {
     val want = (0 until 600).filter(_ % 3 == 0).groupBy(i => s"k${i % 7}")
       .map { case (k, v) => k -> (1 to v.size) }
     assert(emitted == want)
+    restarted
   }
 
   test("a checkpoint written under Spark's default manager restarts") {
@@ -98,5 +102,19 @@ class CheckpointManagerSpec extends AnyFunSuite with TempDirs {
     assert(new Path(dir).getFileSystem(plain.sessionState.newHadoopConf())
       .getClass == stock)
     restartsUnderEngine(plain, classOf[FileSystemBasedCheckpointFileManager])
+  }
+
+  test("a checkpoint written at another state width restarts at that width") {
+    // the engine session runs 4 shuffle partitions; the checkpoint records
+    // the width it was written with, and its state stays partitioned so
+    val wide = spark.newSession()
+    wide.conf.set("spark.sql.shuffle.partitions", "7")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    val restarted = restartsUnderEngine(wide,
+      classOf[FileSystemBasedCheckpointFileManager])
+    val state = restarted.recentProgress.filter(_.numInputRows > 0)
+      .last.stateOperators.head
+    assert(state.numStateStoreInstances == 7)
+    assert(state.numShufflePartitions == 7)
   }
 }

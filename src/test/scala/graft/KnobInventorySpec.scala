@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * text (no Spark). Every session comes from `EngineConf.builder`, and
   * the environment variables and system properties the engine reads are
   * exactly the ones listed here (README "Settings"). A new knob, a
-  * second hand-built session, a new `main` or a second reader of
-  * RainStorm's part files has to change a list here on purpose. */
+  * second hand-built session, a new `main`, a second reader of
+  * RainStorm's part files or a session artifact has to change this
+  * spec on purpose. */
 class KnobInventorySpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -99,6 +100,18 @@ class KnobInventorySpec extends AnyFunSuite {
       (p, src) <- sources if part.findFirstIn(src).nonEmpty
     } yield root.relativize(p).toString
     assert(sites == Seq("graft/streaming/RainStorm.scala"))
+  }
+
+  test("no session artifacts: src/main calls neither addArtifact nor " +
+      "addArtifacts") {
+    // the condition under which EngineConf's
+    // spark.sql.artifact.isolation.enabled=false gives nothing up: an
+    // artifact added to one session would be visible to all of them
+    val add = """\baddArtifacts?\s*\(""".r
+    val sites = for {
+      (p, src) <- sources if add.findFirstIn(src).nonEmpty
+    } yield root.relativize(p).toString
+    assert(sites == Nil)
   }
 
   test("the env vars and system properties read are the listed knobs") {
