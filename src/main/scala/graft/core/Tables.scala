@@ -71,8 +71,10 @@ object Tables {
   val RowsPerTask = 1000L
 
   /** Parquet physical-layout stats for one table file (or dir of files),
-    * read once from the footers and cached — files are immutable by the
-    * same contract as the plan cache above. `rowGroups` is the REAL scan
+    * read once from the footers and cached. It serves only the immutable
+    * fixture files, by the same contract as the plan cache above; a
+    * rebuildable IndexStore artifact's size comes from its manifest
+    * ([[IndexStore.Manifest]]). `rowGroups` is the REAL scan
     * parallelism bound: split planning assigns a row group to the one
     * split holding its midpoint, so a single-row-group file scans on one
     * core no matter maxPartitionBytes. */

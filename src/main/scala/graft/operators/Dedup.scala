@@ -491,12 +491,18 @@ object Dedup {
     * its output; clustering consumes that table downstream instead of
     * recomputing shingling + the inverted index per run (dd09/dd10 are
     * the query-entry form over a parquet pair table). Same CC kernel as
-    * the inline path, so both produce identical members. */
-  def clusterMembersFromPairs(pairsIn: DataFrame): DataFrame = {
+    * the inline path, so both produce identical members.
+    *
+    * `knownRows` is the pair count when the caller already has it (a
+    * persisted pair table's manifest): the pairs are then read as they
+    * are, with no persist and no counting job before the driver path. */
+  def clusterMembersFromPairs(pairsIn: DataFrame,
+      knownRows: Option[Long] = None): DataFrame = {
     val s = pairsIn.sparkSession
-    val pairs = graft.core.CacheScope.track(
-      pairsIn.persist(StorageLevel.MEMORY_AND_DISK))
-    val nPairs = pairs.count()
+    val pairs = if (knownRows.isDefined) pairsIn
+      else graft.core.CacheScope.track(
+        pairsIn.persist(StorageLevel.MEMORY_AND_DISK))
+    val nPairs = knownRows.getOrElse(pairs.count())
     if (nPairs <= 1_000_000L) {
       // driver union-find with min-root representatives (1M edges ≈ tens
       // of MB on the driver; anything larger takes the distributed path).
@@ -520,7 +526,7 @@ object Dedup {
       }
       // pairs is dead the moment the collect lands (the result is a
       // driver-created relation) — release it here, scope or no scope
-      pairs.unpersist(blocking = false)
+      if (knownRows.isEmpty) pairs.unpersist(blocking = false)
       val members = parent.keys.toSeq.map(n => (n, find(n)))
       s.createDataFrame(members).toDF("node", "rep")
     } else {
@@ -562,13 +568,21 @@ object Dedup {
     * runs — pair mining once, clustering/filtering downstream — vs the
     * standalone dd06/dd08 entries, which must mine inline because the
     * correctness gate clears all state between queries. */
-  private def pairTable(s: SparkSession, d: String): DataFrame =
+  private def pairTable(s: SparkSession, d: String)
+      : graft.core.IndexStore.Artifact =
     graft.core.IndexStore.loadOrBuild(s,
       graft.core.IndexStore.root(d) + "/jaccard_pairs") {
       val idx = shingleIndex(s, d)
       jaccardFrom(pairCounts(explPostings(idx)), idx)
         .select(col("d1"), col("d2"))
     }
+
+  /** CC membership over the persisted pair table, sized by its manifest
+    * (dd09, dd10, dd14). */
+  private def pairTableMembers(s: SparkSession, d: String): DataFrame = {
+    val t = pairTable(s, d)
+    clusterMembersFromPairs(t.df, Some(t.rows))
+  }
 
   /** Jaccard pair relation `(d1 < d2, jaccard)` at an arbitrary
     * threshold — dd02's exact kernel (generation-time AllPairs length
@@ -599,34 +613,22 @@ object Dedup {
     * this table is the standard inverted-index artifact (~tokens-sized);
     * partition/bucket it by a shingle hash so probes prune at the scan
     * (here a plain parquet + broadcast semi-join carries the same
-    * plan shape). */
-  private def oldPostings(s: SparkSession, d: String): DataFrame = {
-    val path = graft.core.IndexStore.root(d) + "/postings_old"
-    if (!graft.core.IndexStore.ready(s, path)) {
-      val post = shingleIndex(s, d)
+    * plan shape).
+    *
+    * Its manifest carries the stat `max_n`, max(n) over the old side (0
+    * for an empty index), computed once at BUILD time: the probe's
+    * saturation decision needs it, and paying a full index scan per
+    * increment for one number defeats the point of the index. */
+  private def oldPostings(s: SparkSession, d: String)
+      : graft.core.IndexStore.Artifact =
+    graft.core.IndexStore.loadOrBuild(s,
+      graft.core.IndexStore.root(d) + "/postings_old",
+      stats = Map("max_n" -> coalesce(max(col("n")), lit(0)))) {
+      shingleIndex(s, d)
         .filter(snapshotBucket("doc_id") < 90)
         .select(col("doc_id"), size(col("sh")).as("n"),
           explode(col("sh")).as("s"))
-      post.write.mode("overwrite").parquet(path)
     }
-    // index-level stats, computed once at BUILD time (separate ready
-    // check so an index persisted by an earlier layout self-heals): the
-    // probe's saturation decision needs max(n) over the old side, and
-    // paying a full index scan per increment for one number defeats
-    // the point of the index
-    if (!graft.core.IndexStore.ready(s, path + "_stats"))
-      s.read.parquet(path).agg(max(col("n")).as("max_n"))
-        .coalesce(1).write.mode("overwrite").parquet(path + "_stats")
-    s.read.parquet(path)
-  }
-
-  /** Build-time max shingle-set size of the old snapshot (see
-    * [[oldPostings]]); 0 for an empty index. */
-  private def oldPostingsMaxN(s: SparkSession, d: String): Int = {
-    val r = s.read.parquet(
-      graft.core.IndexStore.root(d) + "/postings_old_stats").head(1)
-    if (r.isEmpty || r(0).isNullAt(0)) 0 else r(0).getInt(0)
-  }
 
   /** Raw LSH near-dup pair relation (v1, v2, cos_r) — dd07's scale
     * path; the driver-gated entry wraps it in [[pairAudit]]. */
@@ -957,7 +959,7 @@ object Dedup {
     // a parquet read of the (dup-rate-sized) pair relation. Same oracle
     // as dd06 — rows must be identical.
     "dd09_clusters_from_pairs" -> ((s, d) =>
-      clusterMembersFromPairs(pairTable(s, d))
+      pairTableMembers(s, d)
         .groupBy(col("rep").as("cluster_rep"))
         .agg(count(lit(1)).as("cluster_size"))),
 
@@ -965,8 +967,7 @@ object Dedup {
     // corpus-side anti join is unchanged, the pair graph comes from
     // parquet. Same oracle as dd08.
     "dd10_dedup_corpus_from_pairs" -> ((s, d) =>
-      withoutDuplicates(Tables(s, d, "documents"),
-          clusterMembersFromPairs(pairTable(s, d)))
+      withoutDuplicates(Tables(s, d, "documents"), pairTableMembers(s, d))
         .select(col("doc_id"), col("lang"), col("source"))),
 
     // Embedding-cosine near-dup pairs, EXACT: all ordered pairs above
@@ -1226,7 +1227,7 @@ object Dedup {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("rep"))
         .orderBy(col("n_chars").desc, col("node").asc)
-      clusterMembersFromPairs(pairTable(s, d))
+      pairTableMembers(s, d)
         .join(meta.hint("shuffle_hash"), col("node") === col("doc_id"))
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
@@ -1317,7 +1318,8 @@ object Dedup {
           explode(col("sh")).as("s"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val newSh = newPost.select(col("s")).distinct()
-      val touchedOld = oldPostings(s, d).join(newSh, Seq("s"), "left_semi")
+      val old = oldPostings(s, d)
+      val touchedOld = old.df.join(newSh, Seq("s"), "left_semi")
       val post = touchedOld.withColumn("is_new", lit(false))
         .unionByName(newPost.withColumn("is_new", lit(true)))
       val cross = graft.core.InvertedIndex.pairCountsLengthPrunedCross(
@@ -1336,7 +1338,7 @@ object Dedup {
       val newMax =
         if (newMaxRow.isEmpty || newMaxRow(0).isNullAt(0)) 0
         else newMaxRow(0).getInt(0)
-      val maxN = math.max(oldPostingsMaxN(s, d), newMax)
+      val maxN = math.max(old.stat("max_n").toInt, newMax)
       val jp =
         if (maxN < SatCap)
           cross.select(col("d1"), col("d2"), jac(col("n1"), col("n2")))

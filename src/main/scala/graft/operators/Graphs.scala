@@ -83,7 +83,8 @@ object Graphs {
     * sf1 gx01 20.5 s / gx02 16.8 s fused vs ~seconds steady). Path is
     * τ-versioned so Graphs can never read a table mined at another
     * threshold. */
-  private def edgeTable(s: SparkSession, d: String): DataFrame =
+  private def edgeTable(s: SparkSession, d: String)
+      : graft.core.IndexStore.Artifact =
     graft.core.IndexStore.loadOrBuild(s,
       graft.core.IndexStore.root(d) +
         s"/jp_tau${math.round(GxTau * 100)}")(
@@ -119,16 +120,15 @@ object Graphs {
       // aggregate — a mat() barrier on jp/deg/ew was measured slower on
       // wall at sf0.1 (quiet full run 2.18 -> 2.48 s) and reverted: the
       // barrier only pays where the duplicated upstream is expensive.
-      val jp = edgeTable(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+      val table = edgeTable(s, d)
+      val jp = table.df.persist(StorageLevel.MEMORY_AND_DISK)
       // occupancy-gated exchange widths (r16, Tables.keyedAt): deg and
       // ew are persisted relations consumed by every pagerank iteration
       // — at shuffle.partitions width each of the 5 iterations paid
       // 32-task launches over KB-scale caches (profiled 0.07-0.35 s per
-      // pass). Gate bound = the mined edge table's own parquet footer
+      // pass). Gate bound = the mined edge table's manifest row count
       // (2x pairs = directed edge count); off at >= 1k edges/core.
-      val edgeRows = 2 * graft.core.Tables.layout(s,
-        graft.core.IndexStore.root(d) +
-          s"/jp_tau${math.round(GxTau * 100)}").rows
+      val edgeRows = 2 * table.rows
       val e = edges(jp)
       val deg = graft.core.Tables.keyedAt(s, edgeRows, e, col("u"))
         .groupBy("u").agg(count(lit(1)).as("deg"))
@@ -159,7 +159,7 @@ object Graphs {
     // semi-joined against the closing (a,c) edge. LCC in micro-units:
     // (2T * 1e6) div (deg*(deg-1)) — integer in both engines.
     "gx02_triangles" -> ((s, d) => {
-      val jp = edgeTable(s, d)
+      val jp = edgeTable(s, d).df
         .persist(StorageLevel.MEMORY_AND_DISK) // read 3x (wedge x2 + close)
       val tri = jp.as("ab")
         .join(jp.as("bc").hint("shuffle_hash"),

@@ -92,10 +92,8 @@ object Similarity {
   // Measured at 50k vectors: recall@5 = 0.92 (sidecar floor 0.8).
   val PqM = 8; val PqDsub = 8; val PqKc = 64; val PqR = 256 * K
 
-  private def indexRoot(d: String): String = graft.core.IndexStore.root(d)
-
-  private def indexReady(s: SparkSession, dir: String): Boolean =
-    graft.core.IndexStore.ready(s, dir)
+  private def readIndex(s: SparkSession, dir: String): DataFrame =
+    graft.core.IndexStore.read(s, dir).df
 
   /** Queries assigned to their nearest centroid — the IVF routing step,
     * shared by the fused query and the persisted-index probe. */
@@ -175,14 +173,14 @@ object Similarity {
       cb: ProductQuantizer.Codebook, path: String): Unit = {
     val rows = cb.zipWithIndex.flatMap { case (cents, mi) =>
       cents.map { case (j, cv) => (mi, j, cv) } }
-    s.createDataFrame(rows).toDF("m", "code", "cvec")
-      .repartition(1).write.mode("overwrite").parquet(path)
+    graft.core.IndexStore.write(s, path,
+      s.createDataFrame(rows).toDF("m", "code", "cvec").repartition(1))
   }
 
   private def readCodebook(s: SparkSession,
       path: String): ProductQuantizer.Codebook = {
     // M x Kc rows (~1k doubles) — driver-side by construction
-    val rows = s.read.parquet(path).collect()
+    val rows = readIndex(s, path).collect()
     (0 until PqM).map { mi =>
       rows.filter(_.getInt(0) == mi)
         .map(r => (r.getInt(1),
@@ -617,7 +615,7 @@ object Similarity {
     * stays inline. Rows are bit-identical to the probe either way (same
     * nearest_centroid kernel, doubles round-trip parquet exactly). */
   def ivfKnn(s: SparkSession, d: String): DataFrame = {
-    val centroids = s.read.parquet(ensureIvfIndex(s, d) + "/centroids")
+    val centroids = readIndex(s, ensureIvfIndex(s, d) + "/centroids")
     // k x dim doubles — driver-side by construction; sorted by cl so
     // exact-tie assignment scans centroids in the order kmeansFull used
     val cents = centroids.collect()
@@ -642,13 +640,13 @@ object Similarity {
     * rest). Builds the index lazily on first touch. */
   def ivfProbe(s: SparkSession, d: String): DataFrame = {
     val root = ensureIvfIndex(s, d)
-    val centroids = s.read.parquet(root + "/centroids")
+    val centroids = readIndex(s, root + "/centroids")
     val qAssign = ivfAssignQueries(s, d, centroids)
     // Q-bounded collect (<= NQueries cell ids) drives static partition
     // pruning on the cells read — only probed directories are listed.
     val probed = qAssign.select(col("cl")).distinct().collect()
       .map(_.getInt(0))
-    val cells = s.read.parquet(root + "/cells")
+    val cells = readIndex(s, root + "/cells")
       .filter(col("cl").isin(probed.map(Int.box): _*))
     ivfScore(cells, qAssign)
   }
@@ -694,7 +692,7 @@ object Similarity {
   def pqProbe(s: SparkSession, d: String): DataFrame = {
     val root = ensurePqIndex(s, d)
     val cb = readCodebook(s, root + "/codebook")
-    pqScore(s, d, cb, s.read.parquet(root + "/codes"),
+    pqScore(s, d, cb, readIndex(s, root + "/codes"),
       Tables(s, d, "embeddings").select(col("vec_id"), col("embedding")))
   }
 
@@ -837,8 +835,8 @@ object Similarity {
     * Hyperparameter-versioned path: a stale index built under another k
     * must never serve a probe compiled with this one. */
   private def ensureIvfIndex(s: SparkSession, d: String): String = {
-    val root = indexRoot(d) + s"/ivf_k$IvfK"
-    if (!indexReady(s, root + "/centroids")) {
+    val root = graft.core.IndexStore.root(d) + s"/ivf_k$IvfK"
+    if (!graft.core.IndexStore.ready(s, root + "/centroids")) {
       // NO rowsHint here (r16): unlike the in-session kernels, this
       // build WRITES a durable artifact — gating the corpus width to
       // occupancy also gates the cells parquet to ~2 files, capping
@@ -848,12 +846,12 @@ object Similarity {
       val (assigned, centroids) = Clustering.kmeansFull(
         Tables(s, d, "embeddings").select(col("vec_id"), col("embedding")),
         k = IvfK, iters = 3)
-      assigned.write.mode("overwrite").partitionBy("cl")
-        .parquet(root + "/cells")
-      // centroids written LAST: IndexStore.ready keys on their _SUCCESS,
-      // so a build killed mid-cells never reads as present
-      centroids.coalesce(1).write.mode("overwrite")
-        .parquet(root + "/centroids")
+      graft.core.IndexStore.write(s, root + "/cells", assigned,
+        partitionBy = Seq("cl"))
+      // centroids written LAST: readiness keys on their manifest, so a
+      // build killed mid-cells never reads as present
+      graft.core.IndexStore.write(s, root + "/centroids",
+        centroids.coalesce(1))
     }
     root
   }
@@ -866,13 +864,14 @@ object Similarity {
     * break the probe/fused contract (caught live when Kc moved 16 -> 64).
     * Returns the index root. */
   private def ensurePqIndex(s: SparkSession, d: String): String = {
-    val root = indexRoot(d) + s"/pq_m${PqM}d${PqDsub}k$PqKc"
-    if (!indexReady(s, root + "/codebook")) {
+    val root = graft.core.IndexStore.root(d) + s"/pq_m${PqM}d${PqDsub}k$PqKc"
+    if (!graft.core.IndexStore.ready(s, root + "/codebook")) {
       val e = Tables.wide(s, d, "embeddings", "vec_id", "embedding")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val cb = ProductQuantizer.train(e, PqM, PqDsub, PqKc, iters = 2)
-      ProductQuantizer.encode(e, cb, PqDsub)
-        .write.mode("overwrite").parquet(root + "/codes")
+      graft.core.IndexStore.write(s, root + "/codes",
+        ProductQuantizer.encode(e, cb, PqDsub))
+      // codebook written LAST: readiness keys on its manifest
       writeCodebook(s, cb, root + "/codebook")
     }
     root

@@ -189,7 +189,10 @@ class RainStormSpec extends AnyFunSuite with TempDirs {
     val session = spark.newSession()
     session.conf.set("fs.file.impl", classOf[RecordingLocalFs].getName)
     session.conf.set("fs.file.impl.disable.cache", "true")
-    RecordingLocalFs.renamed.clear()
+    // the renames are recorded as files, so executors in other JVMs
+    // report them too
+    val renamed = tempDir("rs-sink-renamed")
+    session.conf.set(RecordingLocalFs.DirKey, renamed.getPath)
     val out = new java.io.File(tempDir("rs-sink-conf"), "out")
     val rows = session.range(40)
       .selectExpr("concat('k', id) AS key", "concat('v', id) AS value")
@@ -201,8 +204,7 @@ class RainStormSpec extends AnyFunSuite with TempDirs {
       .filter(n => n.startsWith("part-") && !n.endsWith(".crc"))
     assert(parts.size == 2)
     // the tasks' part-file renames and the driver's batch commit
-    import scala.jdk.CollectionConverters._
-    assert(RecordingLocalFs.renamed.asScala.toSet == parts + "batch-3")
+    assert(renamed.list().toSet == parts + "batch-3")
     assert(readOut(out).sorted == kvLines(0 until 40))
   }
 
@@ -327,17 +329,30 @@ class RainStormSpec extends AnyFunSuite with TempDirs {
 }
 
 /** The engine's `file:` filesystem, recording the name of every rename
-  * target, from the driver and the tasks alike (local mode: one JVM). */
+  * target, from the driver and the tasks alike, as an empty file of that
+  * name in the local directory its configuration names under `DirKey`
+  * (executors share the host's filesystem in local and local-cluster
+  * mode, not the driver's JVM). */
 class RecordingLocalFs extends graft.core.LocalFs {
+  private var dir: String = _
+
+  override def initialize(name: java.net.URI,
+      conf: org.apache.hadoop.conf.Configuration): Unit = {
+    super.initialize(name, conf)
+    dir = conf.get(RecordingLocalFs.DirKey)
+  }
+
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean = {
-    RecordingLocalFs.renamed.add(dst.getName)
+    if (dir != null)
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, dst.getName),
+        Array.emptyByteArray)
     super.rename(src, dst)
   }
 }
 
 object RecordingLocalFs {
-  val renamed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val DirKey = "graft.test.renamedDir"
 }
 
 /** The engine's `file:` filesystem, failing at one point of

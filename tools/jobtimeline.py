@@ -14,7 +14,10 @@ then
 
 Every job is listed with its start offset from the first job, duration,
 stage and task counts, executor CPU, shuffle records written/read and the
-gap since the previous job ended. `--segment REGEX` cuts the log into
+gap since the previous job ended, and described by its SQL execution or,
+for a job outside any (schema inference, RDD actions), by its first
+stage's name, which carries its call site (`parquet at X.scala:43`).
+`--segment REGEX` cuts the log into
 segments, each ending with a SQL execution whose description matches
 (`graft.Bench` ends every timed operation with a `save` to the noop sink),
 and prints per-segment totals: executions, jobs, stages, tasks,
@@ -61,10 +64,12 @@ def load(path):
         elif ev == "SparkListenerJobStart":
             props = e.get("Properties") or {}
             xid = props.get("spark.sql.execution.id")
+            infos = e.get("Stage Infos") or [{}]
             jobs[e["Job ID"]] = {
                 "id": e["Job ID"], "start": e["Submission Time"],
                 "end": None, "stages": e.get("Stage IDs", []),
-                "exec": int(xid) if xid is not None else None}
+                "exec": int(xid) if xid is not None else None,
+                "first_stage": infos[0].get("Stage Name", "")}
         elif ev == "SparkListenerJobEnd":
             if e["Job ID"] in jobs:
                 jobs[e["Job ID"]]["end"] = e["Completion Time"]
@@ -111,8 +116,13 @@ def main():
     t0 = min(j["start"] for j in jobs.values())
     ordered = sorted(jobs.values(), key=lambda j: (j["start"], j["id"]))
 
-    def desc(xid):
-        x = execs.get(xid)
+    def desc(j):
+        """The job's SQL execution description; a job outside any SQL
+        execution (schema inference, RDD actions) shows its first stage's
+        name, which carries the call site."""
+        if j["exec"] is None:
+            return j["first_stage"][:60]
+        x = execs.get(j["exec"])
         return x["desc"][0][:60] if x and x["desc"] else ""
 
     if a.jobs:
@@ -129,7 +139,7 @@ def main():
                   f"{gap:>7} {r['stages']:>3} {r['tasks']:>5} "
                   f"{r['cpu_s'] * 1e3:>7.0f} {r['sw']:>8} {r['sr']:>8} "
                   f"{'' if j['exec'] is None else j['exec']:>5}  "
-                  f"{desc(j['exec'])}")
+                  f"{desc(j)}")
 
     # segments: cut after each closing execution's end
     cuts = []
